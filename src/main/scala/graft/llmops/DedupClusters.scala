@@ -37,7 +37,7 @@ object DedupClusters {
     * page series, incremental re-crawls) where near-dup banding's
     * star fallback cannot bound the diameter. Off by default: dedup
     * clusters are dense (diameter ≲ 4) and the extra join per round
-    * costs more than it saves there. OpsSpec pins a 64-node path
+    * costs more than it saves there. LlmOpsSpec pins a 64-node path
     * converging inside the default budget with shortcutting where
     * plain min-label (needing 63 rounds) is loudly split. */
   def components(pairs: DataFrame, aCol: String, bCol: String,
@@ -69,7 +69,7 @@ object DedupClusters {
     // wrap collision could falsely signal convergence.)
     var converged = false
     var iter = 0
-    val lineageEvery = 6
+    val lineageEvery = if (shortcut) 3 else 6
     while (!converged && iter < maxIters) {
       val neighborMin = edges
         .join(labels, edges("dst") === labels("node"))
@@ -77,13 +77,23 @@ object DedupClusters {
         .agg(min(col("label")).as("nmin"))
       // Lineage hygiene: every `lineageEvery`-th round is an EAGER
       // localCheckpoint instead of a persist — it materializes like
-      // persist AND truncates lineage, bounding the logical plan at
-      // O(lineageEvery) join depth. Without it the nested plan grows
-      // without bound and plan-STRING generation alone OOMs the driver
-      // near ~20 rounds (observed; GraphX applies the same checkpoint
-      // hygiene to its iterative steps). Checkpointing EVERY round
-      // costs a per-round job (~7× on the bench); every 6th is free
-      // for typical diameter ≲ 4 corpora and amortized for deep ones.
+      // persist AND truncates lineage. Between checkpoints each round's
+      // plan holds the previous round's labels more than once: ×2 per
+      // round in plain mode (the left side of the join below, and
+      // inside `neighborMin`), ×4 with `shortcut` (the pointer-jump
+      // self-join reads `propagated`, itself ×2, twice). The rendered
+      // plan therefore grows as fanIn^rounds. persist() does not bound
+      // it: an InMemoryRelation prints its whole cached plan, so the
+      // copies are still expanded whenever the plan is rendered — and
+      // AQE renders it (QueryExecution.explainString) on every plan
+      // update. At shortcut's ×4 a 6-round cadence is 4^6 = 4096
+      // copies at the checkpoint, which OOMs the driver; a 3-round
+      // cadence is 4^3 = 64, the same bound as plain mode's 2^6.
+      // (GraphX applies the same checkpoint hygiene to its iterative
+      // steps.) Checkpointing EVERY round costs a per-round job (~7×
+      // on the bench); every 6th plain round is free for typical
+      // diameter ≲ 4 corpora and amortized for deep ones, and
+      // shortcut mode is only for deep graphs anyway.
       // Checkpoint rounds are restricted to probe rounds so the
       // probe's action materializes round r+1 before round r — whose
       // truncated lineage cannot recompute — is unpersisted.
