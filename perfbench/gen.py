@@ -355,12 +355,34 @@ def make_lake(seed, dst):
 
 # ---------------------------------------------------------------- stream
 
-STREAM_BATCHES = 2
+STREAM_BATCHES = 1
 STREAM_BATCH_DOCS = 100
 
 
+def write_frozen_model(ref, path):
+    """The admission gate's frozen reference model, counted as
+    `LanguageModel.bigramModel` counts it: tokens split on " ", one row
+    `w1<TAB>w2<TAB>c<TAB>c1` per bigram, where c counts the bigram and c1
+    its prefix. Returns V, the number of distinct reference tokens. A model
+    is frozen once per release, so it is an input here, not per-run work."""
+    pairs, tokens = {}, set()
+    for text in ref:
+        toks = text.split(" ")
+        tokens.update(toks)
+        for bg in zip(toks, toks[1:]):
+            pairs[bg] = pairs.get(bg, 0) + 1
+    prefix = {}
+    for (w1, _), c in pairs.items():
+        prefix[w1] = prefix.get(w1, 0) + c
+    with open(path, "w") as f:
+        for (w1, w2), c in sorted(pairs.items()):
+            f.write("%s\t%s\t%d\t%d\n" % (w1, w2, c, prefix[w1]))
+    return len(tokens)
+
+
 def make_stream(seed, dst):
-    """Micro-batches `batch-NNN.parquet` (id, body) plus `ref.parquet`.
+    """Micro-batches `batch-NNN.parquet` (id, body) plus the frozen model
+    `model.tsv` of 300 reference texts.
 
     Per document: 15% exact copy of an earlier text, 15% near copy (one
     word swapped), 10% off-domain text the language-model gate rejects,
@@ -399,15 +421,13 @@ def make_stream(seed, dst):
         pq.write_table(pa.table({"id": pa.array(ids, pa.int64()),
                                  "body": pa.array(bodies, pa.string())}),
                        os.path.join(dst, "batch-%03d.parquet" % b))
-    ref = [fresh() for _ in range(300)]
-    pq.write_table(pa.table({"id": pa.array(range(10 ** 6, 10 ** 6 + len(ref)),
-                                            pa.int64()),
-                             "body": pa.array(ref, pa.string())}),
-                   os.path.join(dst, "ref.parquet"))
+    vocab_size = write_frozen_model([fresh() for _ in range(300)],
+                                    os.path.join(dst, "model.tsv"))
     manifest = {"seed": seed, "batches": STREAM_BATCHES,
                 "batch_docs": STREAM_BATCH_DOCS,
                 "docs": STREAM_BATCHES * STREAM_BATCH_DOCS,
-                "redeliver_batch": STREAM_BATCHES // 2}
+                "redeliver_batch": STREAM_BATCHES // 2,
+                "vocab": vocab_size}
     with open(os.path.join(dst, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=1, sort_keys=True)
     return manifest

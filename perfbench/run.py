@@ -39,7 +39,8 @@ JARS = "/opt/spark/jars"
 CORPUS = {"sql_queries": "/root/testdata/sf0.1",
           "iterative_queries": "/root/testdata/sf0.1"}
 HEAP = "3g"
-JVM_SECONDS = 165
+# what one JVM may take beyond --seconds (and 720 s more when it compiled)
+JVM_SECONDS = 150
 
 # Chosen once by the rule in README.md; neither list depends on --seed.
 SQL_QUERIES = ["q53_multimodal_features", "q50_text_quality", "q23_date_parts",
@@ -48,7 +49,6 @@ ITERATIVE_QUERIES = ["q292_classifier_gate", "q156_zipf_profile",
                      "q203_cluster_agreement"]
 QUERY_LISTS = {"sql_queries": SQL_QUERIES,
                "iterative_queries": ITERATIVE_QUERIES}
-# stream_admit runs on request; README.md says why BENCHMARK.json leaves it out
 WORKLOADS = list(QUERY_LISTS) + ["lake_jobs", "stream_admit"]
 
 ADD_OPENS = [a for p in [
@@ -232,9 +232,9 @@ def main(argv):
         args += ["--sf", sf, "--items", ",".join(QUERY_LISTS[a.workload])]
     else:
         args += ["--lake" if a.workload == "lake_jobs" else "--stream", data]
-    budget = JVM_SECONDS + (720 if built else 0) - (time.time() - start)
-    run_jvm(classpath, args + ["--launch-ms", str(int(time.time() * 1000))],
-            work, budget)
+    budget = JVM_SECONDS + a.seconds + (720 if built else 0) \
+        - (time.time() - start)
+    run_jvm(classpath, args, work, budget)
     jvm_done = time.time()
     with open(result) as f:
         rec = json.load(f)

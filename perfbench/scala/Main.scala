@@ -10,26 +10,23 @@ import graft.core.Sessions
 
 /** The benchmark's JVM: one workload, one fresh process.
   *
-  * Set-up (session plus the workload's inputs bound), a cold pass,
-  * `WarmPasses` warm passes, then measured passes until `--seconds` have
-  * gone by and at least `MinMeasured` passes ran. The warm-up is a fixed
-  * count, not "until two passes agree": in a fresh JVM pass times keep
-  * falling for tens of seconds while the JIT compiles, two passes in a
-  * row often agree on the way down, and a run-dependent pass count puts
-  * each run's measurement at a different point of that curve.
+  * Set-up (session plus the workload's inputs bound), a cold pass, then
+  * measured passes until `--seconds` have gone by and at least the
+  * workload's `minMeasured` passes ran. The warm-up is the cold pass alone, not
+  * "until two passes agree": in a fresh JVM pass times keep falling for
+  * tens of seconds while the JIT compiles, two passes in a row often agree
+  * on the way down, and a run-dependent pass count puts each run's
+  * measurement at a different point of that curve.
   * Leftover persisted blocks are dropped and a full GC runs between
   * passes, outside every clock. Writes one JSON record to `--result`.
   *
   * {{{
   * java ... perfbench.Main --workload sql_queries --seconds 10 --trace 0 \
-  *   --cores 4 --work <dir> --result <file> --launch-ms <epoch ms> \
+  *   --cores 4 --work <dir> --result <file> \
   *   --sf <corpus dir> --items q01,q02
   * }}}
   */
 object Main {
-  private val WarmPasses = 1
-  private val MinMeasured = 2
-
   def main(args: Array[String]): Unit = {
     val o = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
@@ -40,7 +37,6 @@ object Main {
         Json(o("items").split(",").map(q => q -> sql.get(q).orNull).toMap))
       return
     }
-    val launchMs = o("launch-ms").toLong
     val seconds = o("seconds").toDouble
     val cores = o("cores").toInt
     val work = o("work")
@@ -61,7 +57,9 @@ object Main {
       case w => sys.error(s"unknown workload $w")
     }
     wl.setup()
-    val setupS = (System.currentTimeMillis() - launchMs) / 1e3
+    // from the JVM's own start: the launching script's time stays out
+    val setupS = (System.currentTimeMillis() -
+      ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
 
     def dropLeakedBlocks(): Unit =
       spark.sparkContext.getPersistentRDDs.values
@@ -75,12 +73,11 @@ object Main {
       r
     }
     val cold = runPass()
-    val warm = Vector.fill(WarmPasses)(runPass())
     val firstMeasured = n
     val measured = {
       val t0 = System.nanoTime()
       var ps = Vector.empty[(Seq[ItemResult], Option[Double])]
-      while (ps.size < MinMeasured || (System.nanoTime() - t0) / 1e9 < seconds)
+      while (ps.size < wl.minMeasured || (System.nanoTime() - t0) / 1e9 < seconds)
         ps :+= runPass()
       ps
     }
@@ -88,7 +85,8 @@ object Main {
 
     val mItems = measured.flatMap(_._1)
     val failures = mItems.filter(_.failed.nonEmpty)
-    val perItem = mItems.filter(_.failed.isEmpty).groupBy(_.name)
+    val perItem = mItems.filter(r => r.failed.isEmpty && r.latency)
+      .groupBy(_.name)
       .map { case (k, rs) => k -> rs.map(_.seconds) }
     val passTimes = measured.flatMap(_._2)
 
@@ -107,8 +105,7 @@ object Main {
       "failed" -> failures.size,
       "failures" -> failures.map(f => Map("item" -> f.name,
         "class" -> f.failed.get)),
-      "passes" -> Map("cold" -> cold._2, "warm" -> warm.map(_._2),
-        "measured" -> measured.map(_._2)),
+      "passes" -> Map("cold" -> cold._2, "measured" -> measured.map(_._2)),
       "items" -> perItem,
       "end_to_end" -> Map(
         "setup_s" -> setupS,

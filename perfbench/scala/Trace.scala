@@ -103,6 +103,15 @@ final class Tracer(spark: SparkSession, val traced: Boolean) {
     })
   }
 
+  /** Records the analysis phase of a DataFrame the harness built: it ran
+    * eagerly while the DataFrame was made, so no execution event carries
+    * it. Placed by its start time, like the listener's plans. */
+  def analysed(df: org.apache.spark.sql.DataFrame): Unit = if (traced) {
+    df.queryExecution.tracker.phases
+      .get(org.apache.spark.sql.catalyst.QueryPlanningTracker.ANALYSIS)
+      .foreach(p => plans.add(PlanRec(p.startTimeMs, p.durationMs, 0L, 0L)))
+  }
+
   /** Runs `body` inside a new span under the innermost open one. A throw
     * marks the span failed with the exception class and is rethrown. */
   def span[T](kind: String, name: String, pass: Int)(body: => T): T = {

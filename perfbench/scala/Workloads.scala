@@ -5,22 +5,27 @@ import java.time.LocalDate
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField,
+  StructType}
 
 import graft.core.{IO, Paths}
 import graft.jobs.JobRunner
 import graft.streaming.Streams
 
-/** Outcome of one item in one pass; `seconds` is meaningless if failed. */
+/** Outcome of one item in one pass; `seconds` is meaningless if failed.
+  * Items with `latency = false` count as operations but stay out of
+  * `item_p50_s`. */
 final case class ItemResult(name: String, seconds: Double,
-    failed: Option[String])
+    failed: Option[String], latency: Boolean = true)
 
 /** A workload: its items and how one pass over them runs. `setup` binds
   * the inputs; `pass` runs every item once and writes every output. */
 trait Workload {
   def items: Seq[String]
+  /** Fewest measured passes a run makes. */
+  def minMeasured: Int = 1
   def setup(): Unit
   /** Item results and the pass time, or None when the pass failed as a
     * whole (its time then stays out of every statistic). */
@@ -48,6 +53,9 @@ trait Workload {
   * `SparkEntry.queries` and written whole as parquet. */
 final class QueryWorkload(spark: SparkSession, sfDir: String, out: String,
     val items: Seq[String]) extends Workload {
+  // Two samples per query: with one, `item_p50_s` of `iterative_queries`
+  // (its middle item takes 1–2 s) spread 24 % between JVMs.
+  override def minMeasured: Int = 2
   private var registry: Map[String, (SparkSession, String) => DataFrame] = _
 
   def setup(): Unit = {
@@ -66,6 +74,7 @@ final class QueryWorkload(spark: SparkSession, sfDir: String, out: String,
     summed(items.map { q =>
       item(tr, n, "query", q) {
         val df = tr.span("build", q, n)(registry(q)(spark, sfDir))
+        tr.analysed(df)
         tr.span("action", q, n)(
           df.write.mode("overwrite").parquet(s"$out/$q"))
       }
@@ -123,6 +132,7 @@ final class LakeWorkload(spark: SparkSession, lake: String, out: String)
           readers.map { case (k, r) => k -> r() })
         val df = tr.span("pipeline", job, n)(
           JobRunner.jobs(job)._2(spark, inputs))
+        tr.analysed(df)
         tr.span("write", job, n) {
           if (fmt == "csv") IO.writeCsv(df, s"$out/$job")
           else df.write.mode("overwrite").parquet(s"$out/$job")
@@ -136,7 +146,11 @@ final class LakeWorkload(spark: SparkSession, lake: String, out: String)
   * and store, lands one micro-batch file at a time and waits for its
   * commit, redelivers an already committed batch under a new file name,
   * stops the query and runs `compactAdmissionIndex`. Items are the
-  * batches; an item's time is from the file landing to its commit. */
+  * batches, whose time is from the file landing to its commit, and the
+  * compaction, which counts as an operation but not as a latency. A
+  * compaction that leaves an index table with more than one partition
+  * fails with [[StaleIndexPartitions]]; it ran to its end, so its time
+  * stays in the pass. */
 final class StreamWorkload(spark: SparkSession, input: String, out: String)
     extends Workload {
   private val batches = new java.io.File(input).listFiles()
@@ -144,6 +158,10 @@ final class StreamWorkload(spark: SparkSession, input: String, out: String)
   private val redeliver = batches(batches.size / 2)
   private val schema = StructType(Seq(StructField("id", LongType),
     StructField("body", StringType)))
+  /** `LanguageModel.bigramModel`'s columns: p = (c + 1) / (c1 + V). */
+  private val ModelSchema = StructType(Seq(StructField("w1", StringType),
+    StructField("w2", StringType), StructField("c", LongType),
+    StructField("c1", LongType), StructField("p", DoubleType)))
   private var model: DataFrame = _
   private var vocab: Long = 0L
   /** Language-model score floor of the admission gate: between the
@@ -156,12 +174,21 @@ final class StreamWorkload(spark: SparkSession, input: String, out: String)
   private var batchDocs = 0L
 
   def setup(): Unit = {
-    val ref = spark.read.parquet(s"$input/ref.parquet")
-    // held as a local relation: no cached blocks for the harness to drop
-    val m = graft.llmops.LanguageModel.bigramModel(ref, "id", "body")
-    model = spark.createDataFrame(m.collect().toSeq.asJava, m.schema)
-    vocab = graft.llmops.LanguageModel.refVocabSize(ref, "body")
-    batchDocs = spark.read.parquet(s"$input/${batches.head}").count()
+    val manifest = new String(Files.readAllBytes(
+      JPaths.get(input, "manifest.json")), "UTF-8")
+    def field(k: String) = s""""$k": (\\d+)""".r.findFirstMatchIn(manifest)
+      .map(_.group(1).toLong).getOrElse(sys.error(s"no $k in the manifest"))
+    vocab = field("vocab")
+    batchDocs = field("batch_docs")
+    // the frozen model, held as a local relation: no scan per batch and no
+    // cached blocks for the harness to drop
+    val rows = Files.readAllLines(JPaths.get(input, "model.tsv")).asScala
+      .map { line =>
+        val Array(w1, w2, c, c1) = line.split("\t")
+        Row(w1, w2, c.toLong, c1.toLong,
+          (c.toLong + 1).toDouble / (c1.toLong + vocab).toDouble)
+      }
+    model = spark.createDataFrame(rows.asJava, ModelSchema)
   }
 
   private def land(src: String, file: String, as: String): Unit = {
@@ -206,6 +233,15 @@ final class StreamWorkload(spark: SparkSession, input: String, out: String)
         .collect().map(_.getLong(0)).sorted
       tr.span("compact", "admission-index", n)(
         Streams.compactAdmissionIndex(spark, store, lastBatch))
+      val compactSecs = tr.lastClosed.seconds
+      val partitions = IndexTables.map { t =>
+        t -> Option(new java.io.File(s"$store/$t").listFiles())
+          .getOrElse(Array.empty[java.io.File])
+          .count(_.getName.startsWith("batch=")) }.toMap
+      val stale = partitions.filter(_._2 != 1)
+      results :+= ItemResult("compact", compactSecs,
+        if (stale.isEmpty) None
+        else Some(classOf[StaleIndexPartitions].getName), latency = false)
       val files = Files.walk(JPaths.get(store)).iterator().asScala
         .filter(f => Files.isRegularFile(f)).toSeq
       val landed = items.size * batchDocs
@@ -217,16 +253,21 @@ final class StreamWorkload(spark: SparkSession, input: String, out: String)
       Files.writeString(JPaths.get(dir, "pass.json"), Json(Map(
         "last_batch" -> lastBatch, "redelivered" -> redeliver,
         "landed" -> items.map(_ + ".parquet"),
-        "admitted_before_compaction" -> before.toSeq)))
-      (results, Some(streamSecs + tr.lastClosed.seconds))
+        "admitted_before_compaction" -> before.toSeq,
+        "index_partitions" -> partitions)))
+      (results, Some(streamSecs + compactSecs))
     } catch {
-      case _: PassFailed => (results, None)
+      case _: PassFailed =>
+        (results :+ ItemResult("compact", 0.0, Some(classOf[PassFailed]
+          .getName), latency = false), None)
       case e: Exception => // compaction or the store read failed
-        (items.map(ItemResult(_, 0.0, Some(e.getClass.getName))), None)
+        ((items :+ "compact").map(ItemResult(_, 0.0,
+          Some(e.getClass.getName))), None)
     }
   }
 
   private final class PassFailed extends Exception
+  private val IndexTables = Seq("fps", "postings", "dfs")
 
   private def deleteTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteTree))
@@ -237,3 +278,7 @@ final class StreamWorkload(spark: SparkSession, input: String, out: String)
   private val census = scala.collection.mutable.Map.empty[Int, Map[String, Double]]
   def storeCensus(n: Int): Map[String, Double] = census.getOrElse(n, Map.empty)
 }
+
+/** The failure of a compaction that left an admission-index table with
+  * other than one partition. */
+final class StaleIndexPartitions extends Exception
