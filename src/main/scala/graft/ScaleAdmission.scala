@@ -6,15 +6,13 @@ import graft.core.Sessions
 import graft.streaming.Streams
 
 /** Per-batch admission cost as the curated corpus store grows — the
-  * measurement behind the r9 SCALE.md note. Drives the SAME synthetic
-  * batch sequence through the plain curated store (which re-shingles
-  * the whole corpus store every micro-batch) and the indexed store
-  * (persistent fingerprint/postings/df admission index), printing one
-  * line per batch with both wall times. The expected shape: plain
-  * grows linearly with accumulated store size; indexed stays flat at
-  * the per-batch cost.
+  * measurement behind the r9 SCALE.md note. Drives a synthetic batch
+  * sequence through the indexed store (persistent
+  * fingerprint/postings/df admission index), printing one line per
+  * batch with its wall time and the index bytes it read. The expected
+  * shape: flat at the per-batch cost as the store grows.
   *
-  * A third store runs the same sequence with the r12 URL rail on
+  * A second store runs the same sequence with the r12 URL rail on
   * (synthetic URL stream, ~10% recrawl decorations) — expected flat
   * too: the rail is one hash aggregation + two semi-joins per batch.
   *
@@ -83,34 +81,27 @@ object ScaleAdmission {
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    // per-batch INPUT bytes each form must read back from its store:
-    // plain re-reads (and re-shingles) the whole corpus TEXT; indexed
-    // probes the fingerprint/df/postings index and never touches text
+    // per-batch INPUT bytes the store must read back: the
+    // fingerprint/df/postings index, never the corpus text
     def dirBytes(p: String): Long = {
       val path = new org.apache.hadoop.fs.Path(p)
       val fs = path
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
     }
-    println("batch,plain_sec,indexed_sec,indexed_url_sec," +
-      "store_docs,plain_read_mb,indexed_read_mb")
+    println("batch,indexed_sec,indexed_url_sec,store_docs," +
+      "indexed_read_mb")
     batches.zipWithIndex.foreach { case (b, i) =>
       val df = b.toDF("id", "body", "url").cache()
-      df.count() // exclude input materialization from both clocks
+      df.count() // exclude input materialization from the clocks
       // store bytes that THIS batch's admission pass must scan
       // (measured before the commit appends the batch)
-      val plainRead = dirBytes(s"$dir/plain")
       val indexedRead = dirBytes(s"$dir/indexed/fps") +
         dirBytes(s"$dir/indexed/dfs") +
         dirBytes(s"$dir/indexed/postings")
-      val db = df.select("id", "body")
-      val tPlain = timed {
-        Streams.curatedCommit(db, "id", "body", model, v,
-          minScore = 0.0, s"$dir/plain", minJac = 0.5, maxDf = 1000)
-      }
       val tIndexed = timed {
-        Streams.curatedCommitIndexed(db, i.toLong, "id", "body",
-          model, v, minScore = 0.0, s"$dir/indexed",
+        Streams.curatedCommitIndexed(df.select("id", "body"), i.toLong,
+          "id", "body", model, v, minScore = 0.0, s"$dir/indexed",
           minJac = 0.5, maxDf = 1000)
       }
       // URL-rail store: same sequence + the canonical-URL gate (one
@@ -120,9 +111,9 @@ object ScaleAdmission {
           model, v, minScore = 0.0, s"$dir/indexed_url",
           minJac = 0.5, maxDf = 1000, urlCol = Some("url"))
       }
-      val stored = spark.read.parquet(s"$dir/plain").count()
-      println(f"$i,$tPlain%.2f,$tIndexed%.2f,$tUrl%.2f,$stored," +
-        f"${plainRead / 1e6}%.1f,${indexedRead / 1e6}%.1f")
+      val stored = Streams.curatedDocs(spark, s"$dir/indexed").count()
+      println(f"$i,$tIndexed%.2f,$tUrl%.2f,$stored," +
+        f"${indexedRead / 1e6}%.1f")
       df.unpersist()
     }
     spark.stop()

@@ -47,17 +47,11 @@ object Sessions {
         sys.env.getOrElse("GRAFT_PREFER_SORT_MERGE", "false"))
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         sys.env.getOrElse("GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "64m"))
-      // r14 AQE partition-coalescing rails. Both values below are
-      // Spark's own defaults, shipped explicitly as env-overridable
-      // A/B rails, NOT behavior changes: the size-based variant
-      // (parallelismFirst=false) was full-suite A/B-tested in r14 and
-      // REJECTED — it collapses the CPU-dense pair-verify stages to
-      // too few tasks (q164 +3 s); see OPTIMIZATION_r14.md §2a.
-      // GRAFT_AQE_PARALLELISM_FIRST=false re-runs that experiment.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_AQE_ADVISORY_SIZE", "64m"))
+      // AQE partition coalescing stays at Spark's defaults
+      // (parallelismFirst=true, 64 MB advisory size): the size-based
+      // variant was full-suite A/B-tested in r14 and REJECTED — it
+      // collapses the CPU-dense pair-verify stages to too few tasks
+      // (q164 +3 s); see OPTIMIZATION_r14.md §2a.
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
 
@@ -82,35 +76,12 @@ object Sessions {
       catch { case _: Throwable => () }
     trySet("spark.sql.legacy.parquet.nanosAsLong", "true")
     trySet("spark.sql.session.timeZone", "UTC")
-    if (!spark.catalog.functionExists("dn_uuid"))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "dn_uuid", graft.functions.Sha1Mod1e16.builder, "built-in")
-    if (!spark.catalog.functionExists("hash60"))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "hash60", graft.functions.Md5Prefix60.builder, "built-in")
-    if (!spark.catalog.functionExists("simhash_fold"))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "simhash_fold", graft.functions.SimhashFold.builder, "built-in")
-    if (!spark.catalog.functionExists("nfc_normalize"))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "nfc_normalize", graft.functions.NfcNormalize.builder, "built-in")
-    if (!spark.catalog.functionExists("shingle_hash60"))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "shingle_hash60", graft.functions.ShingleHash60.builder, "built-in")
-    if (!spark.catalog.functionExists("minhash_slots"))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_slots", graft.functions.MinhashSlots.builder, "built-in")
-    if (!spark.catalog.functionExists("repeat_gram"))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "repeat_gram", graft.functions.RepeatGram.builder, "built-in")
-    if (!spark.catalog.functionExists("shingle_hash60_all"))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "shingle_hash60_all",
-        graft.functions.ShingleHashAll60.builder, "built-in")
-    if (!spark.catalog.functionExists("graft_might_contain"))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_might_contain",
-        graft.functions.BloomMightContain.builder, "built-in")
+    graft.functions.GraftExtensions.functions.foreach {
+      case (name, _, builder) =>
+        if (!spark.catalog.functionExists(name))
+          spark.sessionState.functionRegistry
+            .createOrReplaceTempFunction(name, builder, "built-in")
+    }
     if (!spark.experimental.extraOptimizations
         .contains(graft.functions.LevenshteinThreshold))
       spark.experimental.extraOptimizations =

@@ -87,28 +87,33 @@ object BloomMightContain {
 
 /** Session-extension entry point: `--conf spark.sql.extensions=
   * graft.functions.GraftExtensions` registers the engine's native
-  * expressions (`dn_uuid`, `hash60`) for SQL and `call_function` use
-  * (Sessions.builder sets it by default). */
+  * expressions ([[GraftExtensions.functions]]) for SQL and
+  * `call_function` use (Sessions.builder sets it by default;
+  * `Sessions.ensureQueryConfs` registers the same list on a session
+  * built without it). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("dn_uuid"),
-      Sha1Mod1e16.info, Sha1Mod1e16.builder))
-    ext.injectFunction((FunctionIdentifier("hash60"),
-      Md5Prefix60.info, Md5Prefix60.builder))
-    ext.injectFunction((FunctionIdentifier("simhash_fold"),
-      SimhashFold.info, SimhashFold.builder))
-    ext.injectFunction((FunctionIdentifier("nfc_normalize"),
-      NfcNormalize.info, NfcNormalize.builder))
-    ext.injectFunction((FunctionIdentifier("shingle_hash60"),
-      ShingleHash60.info, ShingleHash60.builder))
-    ext.injectFunction((FunctionIdentifier("minhash_slots"),
-      MinhashSlots.info, MinhashSlots.builder))
-    ext.injectFunction((FunctionIdentifier("repeat_gram"),
-      RepeatGram.info, RepeatGram.builder))
-    ext.injectFunction((FunctionIdentifier("shingle_hash60_all"),
-      ShingleHashAll60.info, ShingleHashAll60.builder))
-    ext.injectFunction((FunctionIdentifier("graft_might_contain"),
-      BloomMightContain.info, BloomMightContain.builder))
+    GraftExtensions.functions.foreach { case (name, info, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), info, builder))
+    }
     ext.injectOptimizerRule(_ => LevenshteinThreshold)
   }
+}
+
+object GraftExtensions {
+  /** The engine's native SQL functions: (name, info, builder). */
+  val functions
+      : Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(
+      ("dn_uuid", Sha1Mod1e16.info, Sha1Mod1e16.builder),
+      ("hash60", Md5Prefix60.info, Md5Prefix60.builder),
+      ("simhash_fold", SimhashFold.info, SimhashFold.builder),
+      ("nfc_normalize", NfcNormalize.info, NfcNormalize.builder),
+      ("shingle_hash60", ShingleHash60.info, ShingleHash60.builder),
+      ("minhash_slots", MinhashSlots.info, MinhashSlots.builder),
+      ("repeat_gram", RepeatGram.info, RepeatGram.builder),
+      ("shingle_hash60_all", ShingleHashAll60.info,
+        ShingleHashAll60.builder),
+      ("graft_might_contain", BloomMightContain.info,
+        BloomMightContain.builder))
 }

@@ -696,32 +696,26 @@ object JobRunner {
       // offline compaction of a curated-corpus admission index
       // (Streams.compactAdmissionIndex): squash batch partitions
       // <= upto-batch into batch=-1; summary = remaining partition
-      // count per index table
+      // count per index table the compactor compacted
       "compact_admission_index" -> ((s, o) => {
         val in = o.getOrElse("in-store",
           sys.error("--in-store required for compact_admission_index"))
         val upto = o.getOrElse("upto-batch",
           sys.error("--upto-batch required for compact_admission_index"))
           .toLong
-        graft.streaming.Streams.compactAdmissionIndex(s, in, upto)
-        storePartitionSummary(s, in, Seq("dfs", "postings", "fps"))
+        storePartitionSummary(s, in,
+          graft.streaming.Streams.compactAdmissionIndex(s, in, upto))
       }),
       // offline compaction of a media admission store's index tables
-      // (Streams.compactMediaStore) — same contract, fps/bands rails
-      // (+ the frames verify index when the store is a video one)
+      // (Streams.compactMediaStore) — same contract and summary
       "compact_media_store" -> ((s, o) => {
         val in = o.getOrElse("in-store",
           sys.error("--in-store required for compact_media_store"))
         val upto = o.getOrElse("upto-batch",
           sys.error("--upto-batch required for compact_media_store"))
           .toLong
-        graft.streaming.Streams.compactMediaStore(s, in, upto)
-        val fs = new org.apache.hadoop.fs.Path(in)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val tables = Seq("fps", "bands") ++
-          (if (fs.exists(new org.apache.hadoop.fs.Path(s"$in/frames")))
-            Seq("frames") else Nil)
-        storePartitionSummary(s, in, tables)
+        storePartitionSummary(s, in,
+          graft.streaming.Streams.compactMediaStore(s, in, upto))
       }),
       // admission-store census — the operator's "what is this store"
       // command, across all store kinds (curated ±url ±clf, media
@@ -760,9 +754,7 @@ object JobRunner {
           .sorted
         comps.toSeq.map { c =>
           val dir = s"$in/$c"
-          val parts = fs.listStatus(p(dir)).map(_.getPath.getName)
-            .filter(_.startsWith("batch="))
-            .map(_.stripPrefix("batch=").toLong)
+          val parts = graft.streaming.Streams.batchPartitions(fs, dir)
           val nRows =
             if (parts.nonEmpty) s.read.parquet(dir).count() else 0L
           (c, kind, parts.count(_ >= 0L), parts.contains(-1L),
@@ -818,11 +810,8 @@ object JobRunner {
     val fs = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     tables.map { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$storeDir/$t")
-      val n = if (fs.exists(p))
-        fs.listStatus(p).count(_.getPath.getName.startsWith("batch="))
-      else 0
-      (t, n.toLong)
+      (t, graft.streaming.Streams.batchPartitions(fs, s"$storeDir/$t")
+        .size.toLong)
     }.toDF("index_table", "n_partitions")
   }
 

@@ -93,10 +93,11 @@ object DedupClusters {
       // steps.) Checkpointing EVERY round costs a per-round job (~7×
       // on the bench); every 6th plain round is free for typical
       // diameter ≲ 4 corpora and amortized for deep ones, and
-      // shortcut mode is only for deep graphs anyway.
-      // Checkpoint rounds are restricted to probe rounds so the
-      // probe's action materializes round r+1 before round r — whose
-      // truncated lineage cannot recompute — is unpersisted.
+      // shortcut mode is only for deep graphs anyway. The cadence
+      // counts every round, probed or not: a checkpoint is eager, so
+      // it needs no probe to materialize it, and a `probeAfter` above
+      // the cadence must not leave the early rounds unbounded
+      // (LlmOpsSpec pins the plan size per round in both modes).
       // (Dataset.unpersist is a no-op on checkpointed rounds — their
       // storage is RDD-level — so up to maxIters/lineageEvery label
       // snapshots can linger until the ContextCleaner GCs them; the
@@ -135,7 +136,7 @@ object DedupClusters {
       // the job — acceptable in local mode, where there is exactly one
       // "executor" and its loss is the job's loss anyway).
       val next =
-        if ((iter + 1) % lineageEvery == 0 && (iter + 1) >= probeAfter) {
+        if ((iter + 1) % lineageEvery == 0) {
           if (graft.core.Checkpoints.reliable(nextPlan))
             graft.core.Checkpoints.barrier(nextPlan, eager = true)
           else if (pairs.sparkSession.sparkContext.getCheckpointDir.isDefined)

@@ -609,7 +609,7 @@ object Streams {
     * band) histogram into the parquet store — counts ADD, min/max
     * are idempotent lattice merges, so the store equals the q233
     * band histogram of everything ever streamed (the calibration
-    * artifact for choosing `toCuratedCorpusStore`'s minScore, kept
+    * artifact for choosing `toCuratedCorpusStoreIndexed`'s minScore, kept
     * current as the corpus streams in).
     *
     * EXACTLY-ONCE under replay (since r9; counts are additive, so
@@ -847,104 +847,23 @@ object Streams {
   /** Curated-ingest gate — the streaming form of the incremental
     * corpus-admission pipeline: per micro-batch, (1) within-batch
     * exact dedup (keep the min-id copy per text fingerprint),
-    * (2) dedup admission against the store built SO FAR
-    * (`TextOps.incrementalAdmissions` — batch×base work only, never
-    * base×base), (3) LM quality gate against a FROZEN reference
-    * model (`LanguageModel.lmScoreFrozen`, keep `score >= minScore`;
-    * docs with <2 tokens have no defined score and never ship), then
-    * APPEND the surviving docs to the parquet store — the corpus is
-    * the big side, so the store is append-only (a read-modify-rewrite
-    * cycle would rewrite the whole corpus per batch; the sketch
-    * stores rewrite because their stores are bounded).
+    * (2) exact and near-dup admission against the corpus admitted SO
+    * FAR (the decisions of `TextOps.incrementalAdmissions` over that
+    * corpus — batch×base work only, never base×base), (3) LM quality
+    * gate against a FROZEN reference model
+    * (`LanguageModel.lmScoreFrozen`, keep `score >= minScore`; docs
+    * with <2 tokens have no defined score and never ship), then
+    * APPEND the surviving docs to the parquet corpus store. What is
+    * not order-invariant — by design, in any online admission policy
+    * — is which member of a near-dup cluster survives: the
+    * first-delivered representative wins (exact-dup-only corpora ARE
+    * permutation-invariant; PropertySpec pins it).
     *
-    * Replay safety without a dedup log: a re-delivered batch finds
-    * its own earlier copies in the store, and the exact-fingerprint
-    * admission gate drops every doc — at-least-once delivery
-    * converges to exactly-once CONTENT (ids of dropped re-deliveries
-    * are not recorded; the store is contentwise idempotent, the
-    * group-MinHash store's argument applied to whole documents).
-    * PropertySpec pins both claims over random redelivery schedules;
-    * what is NOT order-invariant — by design, in any online admission
-    * policy — is which member of a near-dup cluster survives: the
-    * first-delivered representative wins, so permuting batches can
-    * swap which near-duplicate text ships (exact-dup-only corpora ARE
-    * permutation-invariant, also pinned).
-    *
-    * Scale caveat: this form re-reads and RE-SHINGLES the whole
-    * corpus store every micro-batch — per-batch cost is
-    * corpus-proportional even though candidate pairs are
-    * batch-proportional. Fine at release cadence; for high-frequency
-    * ingestion use [[toCuratedCorpusStoreIndexed]], which maintains
-    * the admission state (fingerprints, capped shingle postings, df
-    * counts) as persistent index stores and never touches corpus
-    * text per batch. */
-  def toCuratedCorpusStore(stream: DataFrame, idCol: String,
-      textCol: String, model: DataFrame, vocabSize: Long,
-      minScore: Double, storeDir: String, checkpoint: String,
-      minJac: Double = 0.5, maxDf: Int = 1000): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        if (!batch0.isEmpty)
-          curatedCommit(batch0, idCol, textCol, model, vocabSize,
-            minScore, storeDir, minJac, maxDf)
-      }
-      .start()
-
-  /** One admission cycle of [[toCuratedCorpusStore]], factored out so
-    * specs can drive batch sequences (and redelivery schedules)
-    * directly without the streaming engine. */
-  private[graft] def curatedCommit(batch0: DataFrame, idCol: String,
-      textCol: String, model: DataFrame, vocabSize: Long,
-      minScore: Double, storeDir: String,
-      minJac: Double, maxDf: Int): Unit = {
-    import graft.core.Checkpoints.BarrierOps
-    val s = batch0.sparkSession
-    // within-batch exact dedup with a deterministic keeper
-    // (incrementalAdmissions' contract scopes within-batch dups
-    // out; dropDuplicates would pick an arbitrary copy)
-    val keep = batch0
-      .groupBy(md5(col(textCol)).as("__fp"))
-      .agg(min(col(idCol)).as(idCol))
-      .select(col(idCol))
-    // three consumers (admissions, scoring, append) — barrier
-    // so the micro-batch source isn't re-planned per consumer
-    val batch = batch0.join(keep, Seq(idCol), "left_semi")
-      .barrier()
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = storePath
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val base =
-      if (fs.exists(storePath)) s.read.parquet(storeDir)
-      else batch.limit(0)
-    // admissions hardcodes its output id column to doc_id —
-    // re-alias so any idCol works (caught by review; the spec
-    // drives a non-default idCol through this path)
-    val admitted = graft.llmops.TextOps
-      .incrementalAdmissions(base, batch, idCol, textCol,
-        minJac, maxDf)
-      .filter(col("is_admitted"))
-      .select(col("doc_id").as(idCol))
-    val passing = graft.llmops.LanguageModel
-      .lmScoreFrozen(
-        batch.join(admitted, Seq(idCol), "left_semi"),
-        model, vocabSize, idCol, textCol)
-      .filter(col("score") >= minScore).select(col(idCol))
-    val out = batch.join(passing, Seq(idCol), "left_semi")
-    if (!out.isEmpty) out.write.mode("append").parquet(storeDir)
-    ()
-  }
-
-  /** [[toCuratedCorpusStore]] with a PERSISTENT admission index — the
-    * 100 TB streaming form. The plain store re-reads and RE-SHINGLES
-    * the entire corpus store every micro-batch
-    * (`TextOps.incrementalAdmissions` builds `shingleIndex(base)` per
-    * call): candidate pairs are batch-proportional, but per-batch scan
-    * cost is corpus-proportional — quadratic total I/O across N
-    * batches. Here the admission state is maintained incrementally in
-    * three index stores next to the corpus, so a batch never touches
-    * corpus TEXT at all:
+    * Recomputing the admissions against the corpus itself would
+    * re-read and re-shingle the whole store every micro-batch —
+    * per-batch cost proportional to the corpus. Instead the admission
+    * state is maintained incrementally in index stores next to the
+    * corpus, so a batch never touches corpus TEXT at all:
     *
     *  - `<storeDir>/fps`      — md5 fingerprint per admitted doc (the
     *    exact-dup gate's entire read surface)
@@ -990,18 +909,19 @@ object Streams {
     * StreamingSpec pins store-backed admissions ≡
     * `incrementalAdmissions` over the same batch sequence.
     *
-    * Replay safety is STRONGER than the plain store's content
-    * argument, and needs no swap or ledger: every store is
-    * partitioned by `batch=<id>`, every read EXCLUDES the current
-    * batch id, and every write overwrites only the current batch's
-    * own partitions. A replayed epoch therefore sees byte-identical
-    * inputs (earlier partitions are append-only history), re-derives
-    * the identical admission decision, and overwrites its own
-    * partitions with identical content — idempotent even when the
-    * first attempt crashed between the four writes, the
-    * multi-store-consistency window a single-directory store never
-    * had. At-least-once redelivery of old CONTENT under a fresh
-    * batch id is handled by the gates themselves, as before.
+    * Replay safety needs no swap or ledger: every store is
+    * partitioned by `batch=<id>` ([[BatchParts]]), every read EXCLUDES
+    * the current batch id, and every write overwrites only the
+    * current batch's own partitions. A replayed epoch therefore sees
+    * byte-identical inputs (earlier partitions are append-only
+    * history), re-derives the identical admission decision, and
+    * overwrites its own partitions with identical content —
+    * idempotent even when the first attempt crashed between the
+    * writes (the multi-store-consistency window). At-least-once
+    * redelivery of old CONTENT under a fresh batch id is handled by
+    * the gates themselves: every redelivered doc finds its own
+    * earlier copy and drops, so the corpus converges to exactly-once
+    * CONTENT (PropertySpec pins it over random redelivery schedules).
     *
     * Read the corpus back with [[curatedDocs]] (drops the partition
     * column). At 1000-executor scale the postings store is the one
@@ -1117,23 +1037,7 @@ object Streams {
             "re-point the stream at the pinned weights")
       }
     }
-    // every store read EXCLUDES the current batch id (partition
-    // pruning — a replayed epoch must not see its own first attempt).
-    // The template also supplies the read schema explicitly: a batch
-    // where everything was rejected writes EMPTY partitions (replay
-    // must be able to erase a crashed attempt's rows), and schema
-    // inference over only-empty files would fail; pinning the batch
-    // partition column to long also sidesteps int/long inference.
-    def readPart(dir: String, template: DataFrame): DataFrame =
-      if (fs.exists(new org.apache.hadoop.fs.Path(dir)))
-        s.read
-          .schema(template.schema.add(org.apache.spark.sql.types
-            .StructField("batch",
-              org.apache.spark.sql.types.LongType)))
-          .parquet(dir)
-          .filter(col("batch") =!= batchId)
-          .drop("batch")
-      else template.limit(0)
+    val part = new BatchParts(fs, batchId)
     // within-batch URL-first collapse (rail on): min-id keeper per
     // canonical URL — the web-pipeline ordering, recrawl decorations
     // drop before content is even compared
@@ -1147,15 +1051,15 @@ object Streams {
         batch0.join(ukeep, Seq(idCol), "left_semi")
       case None => batch0
     }
-    // within-batch exact dedup, deterministic min-id keeper — same
-    // contract as [[curatedCommit]]
+    // within-batch exact dedup, deterministic min-id keeper
+    // (incrementalAdmissions' contract scopes within-batch dups out;
+    // dropDuplicates would pick an arbitrary copy)
     val keep = batchU
       .groupBy(md5(col(textCol)).as("__fp"))
       .agg(min(col(idCol)).as(idCol))
       .select(col(idCol))
     val batch = batchU.join(keep, Seq(idCol), "left_semi").barrier()
-    // the ONLY shingling in the cycle: the batch text (the plain
-    // store re-shingles the whole corpus here)
+    // the ONLY shingling in the cycle: the batch text
     val batchPostings = batch
       .select(col(idCol).as("doc"),
         graft.llmops.TextOps.shingleHashes(col(textCol)).as("arr"))
@@ -1168,7 +1072,7 @@ object Streams {
       .agg(count(lit(1)).as("df_b"))
     val dfTemplate = s.range(0)
       .select(col("id").as("sh"), col("id").as("df"))
-    val dfStore = readPart(dfsDir, dfTemplate)
+    val dfStore = part.read(dfsDir, dfTemplate)
       .groupBy(col("sh")).agg(sum(col("df")).as("df_s"))
       .barrier() // consumed by the under-cap filter AND the append cap
     val underCap = dfBatch.join(dfStore, Seq("sh"), "left")
@@ -1176,7 +1080,7 @@ object Streams {
       .select(col("sh"))
       .barrier() // filters both probe sides
     val bp = batchPostings.join(underCap, Seq("sh"), "left_semi")
-    val sp = readPart(postingsDir, batchPostings)
+    val sp = part.read(postingsDir, batchPostings)
       .join(underCap, Seq("sh"), "left_semi")
     val jac = col("common").cast("double") /
       (col("ni") + col("nb") - col("common"))
@@ -1191,7 +1095,7 @@ object Streams {
     val fpTemplate = batch.select(md5(col(textCol)).as("fp"))
     val exact = batch
       .select(col(idCol), md5(col(textCol)).as("fp"))
-      .join(readPart(fpsDir, fpTemplate), Seq("fp"), "left_semi")
+      .join(part.read(fpsDir, fpTemplate), Seq("fp"), "left_semi")
       .select(col(idCol))
     // URL rail probe: a batch doc whose canonical URL is already
     // admitted is a recrawl — dropped regardless of content (the
@@ -1203,7 +1107,7 @@ object Streams {
         batch
           .select(col(idCol),
             graft.llmops.TextOps.canonicalUrl(col(uc)).as("cu"))
-          .join(readPart(urlsDir, urlTemplate), Seq("cu"), "left_semi")
+          .join(part.read(urlsDir, urlTemplate), Seq("cu"), "left_semi")
           .select(col(idCol))
       case None => batch.select(col(idCol)).limit(0)
     }
@@ -1241,8 +1145,6 @@ object Streams {
     val keepSh = dfOut.join(dfStore, Seq("sh"), "left")
       .filter(col("df") + coalesce(col("df_s"), lit(0L)) <= maxDf)
       .select(col("sh"))
-    def writePart(df: DataFrame, dir: String): Unit =
-      df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
     // first commit stamps the meta table (cap + index schemas); a
     // crash-replay re-stamps identical content, so no swap is needed
     if (!fs.exists(new org.apache.hadoop.fs.Path(metaDir))) {
@@ -1257,19 +1159,16 @@ object Streams {
           "clf_buckets")
         .coalesce(1).write.mode("overwrite").parquet(metaDir)
     }
-    // empty frames still write their partition: a replayed epoch that
-    // (re-)derives an empty admission must erase a crashed first
-    // attempt's partial rows, not skip past them
-    writePart(out, docsDir)
-    writePart(out.select(md5(col(textCol)).as("fp")), fpsDir)
+    part.write(out, docsDir)
+    part.write(out.select(md5(col(textCol)).as("fp")), fpsDir)
     urlCol.foreach { uc =>
-      writePart(out
+      part.write(out
         .select(graft.llmops.TextOps.canonicalUrl(col(uc)).as("cu")),
         urlsDir)
     }
-    writePart(outPostings.join(keepSh, Seq("sh"), "left_semi")
+    part.write(outPostings.join(keepSh, Seq("sh"), "left_semi")
       .select(col("doc"), col("nsh"), col("sh")), postingsDir)
-    writePart(dfOut, dfsDir)
+    part.write(dfOut, dfsDir)
     ()
   }
 
@@ -1277,6 +1176,63 @@ object Streams {
     * without the internal batch partition column. */
   def curatedDocs(spark: SparkSession, storeDir: String): DataFrame =
     spark.read.parquet(s"$storeDir/docs").drop("batch")
+
+  /** The batch-partition layout every admission store shares: each of
+    * a store's tables is a directory of `batch=<id>` partitions, one
+    * per committed micro-batch (plus `batch=-1` once compacted). A
+    * commit reads and writes its store only through this:
+    *
+    *  - [[read]] EXCLUDES batch `batchId` (partition pruning — a
+    *    replayed epoch must not see its own first attempt) and reads
+    *    under the template's schema: a batch where everything was
+    *    rejected writes EMPTY partitions, and schema inference over
+    *    only-empty files would fail; pinning the partition column to
+    *    long also sidesteps int/long inference. A table not written
+    *    yet reads as the empty template.
+    *  - [[write]] overwrites only batch `batchId`'s partition, and
+    *    writes it even when `df` is empty: a replayed epoch that
+    *    (re-)derives an empty admission must erase a crashed first
+    *    attempt's partial rows, not skip past them. */
+  private final class BatchParts(fs: org.apache.hadoop.fs.FileSystem,
+      batchId: Long) {
+    def read(dir: String, template: DataFrame): DataFrame =
+      if (fs.exists(new org.apache.hadoop.fs.Path(dir)))
+        readPinned(template.sparkSession, dir, template.schema)
+          .filter(col("batch") =!= batchId).drop("batch")
+      else template.limit(0)
+    def write(df: DataFrame, dir: String): Unit =
+      df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+  }
+
+  /** Every partition of a batch-partitioned table, read under `schema`
+    * plus the long `batch` partition column. */
+  private def readPinned(spark: SparkSession, dir: String,
+      schema: StructType): DataFrame =
+    spark.read
+      .schema(schema.add(org.apache.spark.sql.types.StructField("batch",
+        org.apache.spark.sql.types.LongType)))
+      .parquet(dir)
+
+  /** An index schema pinned in a store's meta row (`field` holds its
+    * JSON). */
+  private def pinnedSchema(meta: org.apache.spark.sql.Row,
+      field: String): StructType =
+    org.apache.spark.sql.types.DataType
+      .fromJson(meta.getAs[String](field)).asInstanceOf[StructType]
+
+  /** The `batch=<id>` partition ids of a store table, from the file
+    * system listing (none if `dir` does not exist). A batch that
+    * admitted nothing holds only empty files, so it has no rows — but
+    * its directory exists: the listing, not the rows, says which
+    * partitions a table has. */
+  private[graft] def batchPartitions(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String): Seq[Long] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("batch="))
+      .map(_.stripPrefix("batch=").toLong).sorted
+  }
 
   /** True iff `dir` has a compaction swap that crashed mid-flight
     * (its pending marker survives). Commit paths check this and fail
@@ -1345,7 +1301,7 @@ object Streams {
     * rename already happened, so `batch=-1` is the NEW squash — just
     * sweep the remaining superseded partitions. No marker: any stale
     * tmp/markerTmp predates the destructive phase and is deleted.
-    * Idempotent; both compactors run it on entry. */
+    * Idempotent; [[compactStore]] runs it on entry. */
   private[graft] def recoverCompactSwap(
       fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
     val tmp = new org.apache.hadoop.fs.Path(s"${dir}__compact_tmp")
@@ -1383,95 +1339,94 @@ object Streams {
     }
   }
 
-  /** Offline maintenance for the admission index: squash the
-    * per-batch df deltas and postings partitions with
-    * `batch <= uptoBatch` into a single `batch=-1` history partition
-    * (−1 is never a real epoch id, so the exclude-own-batch read is
-    * unaffected), dropping postings whose cumulative df crossed the
-    * cap (they are physically present but logically dead — df never
-    * shrinks). Run it with the stream STOPPED and `uptoBatch` strictly
-    * below the checkpoint's last committed epoch: a replayable epoch
-    * folded into history could no longer exclude its own first
-    * attempt. Admission decisions after compaction are identical
-    * (StreamingSpec pins it); reads get fewer partitions to list and
-    * sum.
+  /** One index table of a store compaction: its directory under the
+    * store, its meta-pinned schema, and the squash applied to its
+    * folded rows (identity for a plain rewrite). */
+  private final case class IndexTable(name: String, schema: StructType,
+      squash: DataFrame => DataFrame = identity)
+
+  /** The one compactor behind [[compactAdmissionIndex]] and
+    * [[compactMediaStore]]. It refuses a directory without the meta
+    * table (`notAStore` says why), then, for each of `tables` present
+    * under the store and in order, squashes its partitions with
+    * `batch <= uptoBatch` into one `batch=-1` history partition (−1 is
+    * never a real epoch id, so the exclude-own-batch read is
+    * unaffected; a previous `batch=-1` folds back in). The partitions
+    * to fold come from [[batchPartitions]], so a batch that admitted
+    * nothing is folded too. Rows are read under the pinned schema (a
+    * history whose partitions are all empty has no schema to infer).
+    * Each table first heals a crashed earlier swap
+    * ([[recoverCompactSwap]]) and then swaps through the marker
+    * protocol of [[swapCompacted]], so repeated compaction is safe
+    * and no crash point silently loses index rows. A table's squash
+    * runs after the tables before it are compacted. Returns the names
+    * of the tables present, in order.
     *
-    * The df cap and the index schemas come from the store's own meta
-    * table (stamped by the first commit) — compaction canNOT be run
-    * with a cap different from the stream's (a smaller one would
-    * permanently drop postings still under the stream's cap,
-    * silently changing later admissions), and the reads are
-    * explicit-schema like [[curatedCommitIndexed]]'s (a history
-    * range whose partitions are all empty — every batch rejected —
-    * has no schema to infer, and inference types the batch partition
-    * column int where the pinned reads use long). */
-  def compactAdmissionIndex(spark: SparkSession, storeDir: String,
-      uptoBatch: Long): Unit = {
-    require(uptoBatch >= 0, s"compactAdmissionIndex: uptoBatch=$uptoBatch")
+    * Run it with the stream STOPPED and `uptoBatch` strictly below the
+    * checkpoint's last committed epoch: a replayable epoch folded into
+    * history could no longer exclude its own first attempt, and
+    * replaying a compacted batch id would re-add its rows. */
+  private def compactStore(spark: SparkSession, storeDir: String,
+      uptoBatch: Long, caller: String, notAStore: String)(
+      tables: org.apache.spark.sql.Row => Seq[IndexTable]): Seq[String] = {
+    require(uptoBatch >= 0, s"$caller: uptoBatch=$uptoBatch")
     val fs = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def exists(dir: String): Boolean =
       fs.exists(new org.apache.hadoop.fs.Path(dir))
     val metaDir = s"$storeDir/meta"
-    require(exists(metaDir),
-      s"compactAdmissionIndex: $metaDir missing — not a " +
-        "toCuratedCorpusStoreIndexed store (the meta table pins the " +
-        "stream's maxDf; compacting under a different cap would " +
-        "silently change subsequent admission decisions)")
-    val meta = spark.read.parquet(metaDir).first()
-    val maxDf = meta.getAs[Int]("max_df")
-    def schemaOf(field: String): org.apache.spark.sql.types.StructType =
-      org.apache.spark.sql.types.DataType
-        .fromJson(meta.getAs[String](field))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    def readPinned(dir: String,
-        schema: org.apache.spark.sql.types.StructType): DataFrame =
-      spark.read
-        .schema(schema.add(org.apache.spark.sql.types.StructField(
-          "batch", org.apache.spark.sql.types.LongType)))
-        .parquet(dir)
-    def compact(dir: String,
-        schema: org.apache.spark.sql.types.StructType)(
-        squash: DataFrame => DataFrame): Unit =
-      if (exists(dir)) {
-        // heal any crashed previous swap first, so oldParts is
-        // computed from a consistent store
+    require(exists(metaDir), s"$caller: $metaDir missing — $notAStore")
+    tables(spark.read.parquet(metaDir).first())
+      .filter(t => exists(s"$storeDir/${t.name}"))
+      .map { t =>
+        val dir = s"$storeDir/${t.name}"
         recoverCompactSwap(fs, dir)
-        // batch=-1 (a previous compaction) always folds in: -1 <=
-        // uptoBatch; the swap itself is the crash-safe marker
-        // protocol of [[swapCompacted]], so repeated compaction is
-        // safe and no crash point silently loses index rows
-        val old = readPinned(dir, schema)
-          .filter(col("batch") <= uptoBatch)
-        // bounded collect: one Long per store partition (<= #batches
-        // ever committed), a partition-id listing — not a data path
-        val oldParts = old.select(col("batch"))
-          .distinct().collect().map(_.getLong(0))
+        val oldParts = batchPartitions(fs, dir).filter(_ <= uptoBatch)
         if (oldParts.nonEmpty)
-          swapCompacted(fs, dir, squash(old.drop("batch")),
-            oldParts.toSeq)
+          swapCompacted(fs, dir, t.squash(readPinned(spark, dir, t.schema)
+            .filter(col("batch") <= uptoBatch).drop("batch")), oldParts)
+        t.name
       }
-    compact(s"$storeDir/dfs", schemaOf("dfs_schema"))(
-      _.groupBy(col("sh")).agg(sum(col("df")).as("df")))
-    // postings whose TOTAL df (across the whole dfs history, compacted
-    // or not) crossed the cap are dead — the probe's under-cap filter
-    // can never select them again
-    if (exists(s"$storeDir/dfs") && exists(s"$storeDir/postings")) {
-      val liveSh = readPinned(s"$storeDir/dfs", schemaOf("dfs_schema"))
-        .drop("batch")
-        .groupBy(col("sh")).agg(sum(col("df")).as("df"))
-        .filter(col("df") <= maxDf).select(col("sh"))
-      compact(s"$storeDir/postings", schemaOf("postings_schema"))(
-        _.join(liveSh, Seq("sh"), "left_semi"))
-    }
-    compact(s"$storeDir/fps", schemaOf("fps_schema"))(identity)
-    // URL rail (r12, present only on url_rail stores): the canonical
-    // key column is pinned `cu string` by construction, so the schema
-    // needs no meta field
-    compact(s"$storeDir/urls", org.apache.spark.sql.types.StructType(
-      Seq(org.apache.spark.sql.types.StructField("cu",
-        org.apache.spark.sql.types.StringType))))(identity)
   }
+
+  /** Offline maintenance for the admission index of a
+    * [[toCuratedCorpusStoreIndexed]] store ([[compactStore]]): squash
+    * the per-batch df deltas (summed per shingle), postings, fps and —
+    * on a URL-rail store — urls partitions up to `uptoBatch`, dropping
+    * postings whose cumulative df crossed the cap (they are physically
+    * present but logically dead — df never shrinks). Admission
+    * decisions after compaction are identical (StreamingSpec pins
+    * it); reads get fewer partitions to list and sum. The df cap and
+    * the index schemas come from the store's own meta table (stamped
+    * by the first commit) — compaction canNOT be run with a cap
+    * different from the stream's (a smaller one would permanently drop
+    * postings still under the stream's cap, silently changing later
+    * admissions). Returns the index tables compacted. */
+  def compactAdmissionIndex(spark: SparkSession, storeDir: String,
+      uptoBatch: Long): Seq[String] =
+    compactStore(spark, storeDir, uptoBatch, "compactAdmissionIndex",
+      "not a toCuratedCorpusStoreIndexed store (the meta table pins the " +
+        "stream's maxDf; compacting under a different cap would " +
+        "silently change subsequent admission decisions)") { meta =>
+      val dfs = pinnedSchema(meta, "dfs_schema")
+      def summed(d: DataFrame): DataFrame =
+        d.groupBy(col("sh")).agg(sum(col("df")).as("df"))
+      // postings whose TOTAL df crossed the cap are dead — the probe's
+      // under-cap filter can never select them again. dfs is compacted
+      // first, so this reads its squashed history
+      def live(postings: DataFrame): DataFrame = postings.join(
+        summed(readPinned(spark, s"$storeDir/dfs", dfs).drop("batch"))
+          .filter(col("df") <= meta.getAs[Int]("max_df"))
+          .select(col("sh")), Seq("sh"), "left_semi")
+      Seq(IndexTable("dfs", dfs, summed),
+        IndexTable("postings", pinnedSchema(meta, "postings_schema"),
+          live),
+        IndexTable("fps", pinnedSchema(meta, "fps_schema")),
+        // URL rail (present only on url_rail stores): the canonical key
+        // column is pinned `cu string` by construction
+        IndexTable("urls", StructType(Seq(org.apache.spark.sql.types
+          .StructField("cu", org.apache.spark.sql.types.StringType)))))
+    }
 
   /** Streaming IMAGE corpus ingest with incremental near-dup
     * admission — the multimodal form of
@@ -1582,16 +1537,7 @@ object Streams {
           s"maxHamming=$stored but this commit uses $maxHamming — " +
           "the threshold is part of the store's admission contract")
     }
-    def readPart(dir: String, template: DataFrame): DataFrame =
-      if (fs.exists(new org.apache.hadoop.fs.Path(dir)))
-        s.read
-          .schema(template.schema.add(org.apache.spark.sql.types
-            .StructField("batch",
-              org.apache.spark.sql.types.LongType)))
-          .parquet(dir)
-          .filter(col("batch") =!= batchId)
-          .drop("batch")
-      else template.limit(0)
+    val part = new BatchParts(fs, batchId)
     // ONE signature pass; undecodable payloads rejected by `sign`
     val media = batch0.select(
         col(idCol).cast("long").as("doc_id"),
@@ -1607,7 +1553,7 @@ object Streams {
     // exact rail: content fingerprint already admitted
     val fpTemplate = b1.select(col("fp"))
     val exactDropped = b1
-      .join(readPart(fpsDir, fpTemplate), Seq("fp"), "left_semi")
+      .join(part.read(fpsDir, fpTemplate), Seq("fp"), "left_semi")
       .select(col("doc_id"))
     // near rail: shared 16-bit band + Hamming ≤ maxHamming
     def bandsOf(df: DataFrame): DataFrame = df.select(
@@ -1621,7 +1567,7 @@ object Streams {
     val nearDropped = batchBands
       .select(col("doc_id"), col("nhash").as("__hb"), col("band"),
         col("bucket"))
-      .join(readPart(bandsDir, bandTemplate)
+      .join(part.read(bandsDir, bandTemplate)
           .select(col("nhash").as("__hs"), col("band"), col("bucket")),
         Seq("band", "bucket"))
       .filter(bit_count(col("__hb").bitwiseXOR(col("__hs")))
@@ -1648,8 +1594,6 @@ object Streams {
       .unionByName(intraNearDropped).distinct()
     val admitted = b1.join(dropped, Seq("doc_id"), "left_anti")
       .barrier() // feeds docs, fps AND bands writes
-    def writePart(df: DataFrame, dir: String): Unit =
-      df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
     if (!fs.exists(new org.apache.hadoop.fs.Path(metaDir))) {
       Seq((maxHamming, fpTemplate.schema.json, bandTemplate.schema.json))
         .toDF("max_hamming", "fps_schema", "bands_schema")
@@ -1659,9 +1603,9 @@ object Streams {
       .select(col(idCol).cast("long").as("doc_id"),
         col(payloadCol).as("payload"), col(sourceCol).as("source"))
       .join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    writePart(docsOut, docsDir)
-    writePart(admitted.select(col("fp")), fpsDir)
-    writePart(bandsOf(admitted), bandsDir)
+    part.write(docsOut, docsDir)
+    part.write(admitted.select(col("fp")), fpsDir)
+    part.write(bandsOf(admitted), bandsDir)
     ()
   }
 
@@ -1771,16 +1715,7 @@ object Streams {
           s"$maxBucket) — all three are part of the store's " +
           "admission contract")
     }
-    def readPart(dir: String, template: DataFrame): DataFrame =
-      if (fs.exists(new org.apache.hadoop.fs.Path(dir)))
-        s.read
-          .schema(template.schema.add(org.apache.spark.sql.types
-            .StructField("batch",
-              org.apache.spark.sql.types.LongType)))
-          .parquet(dir)
-          .filter(col("batch") =!= batchId)
-          .drop("batch")
-      else template.limit(0)
+    val part = new BatchParts(fs, batchId)
     // ONE frame pass; clips shorter than one frame emit no rows and
     // are thereby rejected
     val media = batch0.select(
@@ -1805,7 +1740,7 @@ object Streams {
     // exact rail: set fingerprint already admitted
     val fpTemplate = b1set.select(col("fp"))
     val exactDropped = b1set
-      .join(readPart(fpsDir, fpTemplate), Seq("fp"), "left_semi")
+      .join(part.read(fpsDir, fpTemplate), Seq("fp"), "left_semi")
       .select(col("doc_id"))
     // near rail, candidate stage: set-MinHash bands (q270's engine)
     val batchBands = b1set
@@ -1813,7 +1748,7 @@ object Streams {
         col("sig_0"), col("sig_1"), col("sig_2"), col("sig_3")))
         .as(Seq("band", "bucket")))
     val bandTemplate = batchBands
-    val storedBands = readPart(bandsDir, bandTemplate)
+    val storedBands = part.read(bandsDir, bandTemplate)
       .barrier() // bucket-cap count + candidate probe
     // boilerplate guard: a stored bucket over maxBucket proposes no
     // candidates (the curated store's df-cap discipline — once hot,
@@ -1838,7 +1773,7 @@ object Streams {
     val cand = crossCand.unionByName(intraCand).distinct()
     // near rail, verify stage: EXACT containment on candidates only
     val framesTemplate = b1frames
-    val storedFrames = readPart(framesDir, framesTemplate)
+    val storedFrames = part.read(framesDir, framesTemplate)
     val otherFrames = storedFrames.unionByName(b1frames).barrier()
     val nfB = b1set.select(col("doc_id"), col("nf").as("__nb"))
     val nfO = otherFrames.groupBy(col("doc_id").as("ob"))
@@ -1857,8 +1792,6 @@ object Streams {
     val dropped = exactDropped.unionByName(nearDropped).distinct()
     val admitted = b1set.join(dropped, Seq("doc_id"), "left_anti")
       .barrier() // feeds docs, fps, bands AND frames writes
-    def writePart(df: DataFrame, dir: String): Unit =
-      df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
     if (!fs.exists(new org.apache.hadoop.fs.Path(metaDir))) {
       Seq((minContainment, frameBytes, maxBucket,
         fpTemplate.schema.json, bandTemplate.schema.json,
@@ -1872,11 +1805,11 @@ object Streams {
       .select(col(idCol).cast("long").as("doc_id"),
         col(payloadCol).as("payload"), col(sourceCol).as("source"))
       .join(admittedIds, Seq("doc_id"), "left_semi")
-    writePart(docsOut, docsDir)
-    writePart(admitted.select(col("fp")), fpsDir)
-    writePart(batchBands.join(admittedIds, Seq("doc_id"), "left_semi"),
+    part.write(docsOut, docsDir)
+    part.write(admitted.select(col("fp")), fpsDir)
+    part.write(batchBands.join(admittedIds, Seq("doc_id"), "left_semi"),
       bandsDir)
-    writePart(b1frames.join(admittedIds, Seq("doc_id"), "left_semi"),
+    part.write(b1frames.join(admittedIds, Seq("doc_id"), "left_semi"),
       framesDir)
     ()
   }
@@ -2087,22 +2020,17 @@ object Streams {
       // the pinned index schemas are part of the contract too: a
       // store written by an engine whose fps partitions carry
       // different column names (e.g. a pre-r13 captioned store's
-      // pix_fp) would read as all-NULL fp under readPart's template
+      // pix_fp) would read as all-NULL fp under [[BatchParts]]'s template
       // schema — the exact rail silently never matching historical
       // pairs — and a later compaction under the pinned schema would
       // null the NEW batches' fingerprints permanently. Refuse
       // instead; migrate the store offline before committing.
-      def pinnedNames(field: String): Seq[String] =
-        org.apache.spark.sql.types.DataType
-          .fromJson(m.getAs[String](field))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-          .fieldNames.toSeq
       Seq(("fps_schema", Seq("fp", "cap_fp")),
           ("bands_schema", Seq("doc_id", "nhash", "band", "bucket")),
           ("postings_schema", Seq("doc_id", "nsh", "sh")))
         .foreach { case (field, want) =>
           if (m.schema.fieldNames.contains(field)) {
-            val got = pinnedNames(field)
+            val got = pinnedSchema(m, field).fieldNames.toSeq
             require(got == want,
               s"$caller: store $storeDir pins $field columns " +
                 s"(${got.mkString(", ")}) but this engine writes " +
@@ -2112,16 +2040,7 @@ object Streams {
           }
         }
     }
-    def readPart(dir: String, template: DataFrame): DataFrame =
-      if (fs.exists(new org.apache.hadoop.fs.Path(dir)))
-        s.read
-          .schema(template.schema.add(org.apache.spark.sql.types
-            .StructField("batch",
-              org.apache.spark.sql.types.LongType)))
-          .parquet(dir)
-          .filter(col("batch") =!= batchId)
-          .drop("batch")
-      else template.limit(0)
+    val part = new BatchParts(fs, batchId)
     val base = batch0.select(
         col(idCol).cast("long").as("doc_id"),
         col(payloadCol).as("payload"),
@@ -2151,7 +2070,7 @@ object Streams {
     // exact rail: paired fingerprint already admitted
     val fpTemplate = b1.select(col("fp"), col("cap_fp"))
     val exactDropped = b1
-      .join(readPart(fpsDir, fpTemplate), Seq("fp", "cap_fp"),
+      .join(part.read(fpsDir, fpTemplate), Seq("fp", "cap_fp"),
         "left_semi")
       .select(col("doc_id"))
     // near rail, media candidates: shared 16-bit nhash band AND
@@ -2164,7 +2083,7 @@ object Streams {
         .as(Seq("band", "bucket")))
     val batchBands = bandsOf(b1).barrier()
     val bandTemplate = batchBands
-    val storedBands = readPart(bandsDir, bandTemplate)
+    val storedBands = part.read(bandsDir, bandTemplate)
     def hammingCand(other: DataFrame, intra: Boolean): DataFrame =
       batchBands
         .select(col("doc_id"), col("nhash").as("__hb"), col("band"),
@@ -2183,7 +2102,7 @@ object Streams {
     // the shingle join is keyed (candidate doc, shingle), bounded by
     // |cand| × shingles/doc, never a corpus self-join
     val postingsTemplate = b1Sh
-    val otherSh = readPart(postingsDir, postingsTemplate)
+    val otherSh = part.read(postingsDir, postingsTemplate)
       .unionByName(b1Sh)
     val nearDropped = cand
       .join(b1Sh.select(col("doc_id"), col("nsh").as("__nb"),
@@ -2198,8 +2117,6 @@ object Streams {
     val dropped = exactDropped.unionByName(nearDropped).distinct()
     val admitted = b1.join(dropped, Seq("doc_id"), "left_anti")
       .barrier() // feeds docs, fps, bands AND postings writes
-    def writePart(df: DataFrame, dir: String): Unit =
-      df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
     if (!fs.exists(new org.apache.hadoop.fs.Path(metaDir))) {
       Seq((maxHamming, minJac, kind, fpTemplate.schema.json,
         bandTemplate.schema.json, postingsTemplate.schema.json))
@@ -2208,12 +2125,12 @@ object Streams {
         .coalesce(1).write.mode("overwrite").parquet(metaDir)
     }
     val admittedIds = admitted.select(col("doc_id"))
-    writePart(base.join(admittedIds, Seq("doc_id"), "left_semi"),
+    part.write(base.join(admittedIds, Seq("doc_id"), "left_semi"),
       docsDir)
-    writePart(admitted.select(col("fp"), col("cap_fp")), fpsDir)
-    writePart(batchBands.join(admittedIds, Seq("doc_id"), "left_semi"),
+    part.write(admitted.select(col("fp"), col("cap_fp")), fpsDir)
+    part.write(batchBands.join(admittedIds, Seq("doc_id"), "left_semi"),
       bandsDir)
-    writePart(b1Sh.join(admittedIds, Seq("doc_id"), "left_semi"),
+    part.write(b1Sh.join(admittedIds, Seq("doc_id"), "left_semi"),
       postingsDir)
     ()
   }
@@ -2224,71 +2141,28 @@ object Streams {
 
   /** Offline compaction for a media admission store
     * ([[toImageCorpusStore]] / [[toAudioCorpusStore]] /
-    * [[toVideoCorpusStore]]): squash the
-    * `fps` and `bands` (and, for a video store, `frames`)
-    * index partitions with `batch <= uptoBatch`
-    * into one `batch=-1` partition each, so a long-lived store's
-    * probe reads stop scaling with micro-batch count. Admission
-    * decisions are unchanged: both rails read the union of
-    * partitions and the squash is an identity rewrite (no rows added
-    * or dropped; `batch=-1` from a previous compaction folds in —
-    * −1 ≤ uptoBatch — and its partition is deleted before the rename
-    * recreates it, so repeated compaction is safe). Reads are
-    * explicit-schema from the meta table ([[compactAdmissionIndex]]'s
-    * lesson: a range whose partitions are all empty has no schema to
-    * infer). The `docs` partitions are the corpus itself and are left
-    * alone — compact them with `IO.compact` under its
-    * exclusive-access contract if needed. Like the curated-store
-    * compactor, run this only for batches the stream has moved past:
-    * replaying a compacted batch id would re-add its rows. */
+    * [[toVideoCorpusStore]] and the paired stores) through
+    * [[compactStore]]: an identity rewrite of the `fps` and `bands`
+    * index partitions up to `uptoBatch` into `batch=-1` — plus the
+    * `frames` verify index of a video store and the caption `postings`
+    * of a paired store; each store's meta pins its extra schema, which
+    * is how the compactor knows what is there — so a long-lived
+    * store's probe reads stop scaling with micro-batch count.
+    * Admission decisions are unchanged: both rails read the union of
+    * partitions and the squash adds or drops no rows. The `docs`
+    * partitions are the corpus itself and are left alone — compact
+    * them with `IO.compact` under its exclusive-access contract if
+    * needed. Returns the index tables compacted. */
   def compactMediaStore(spark: SparkSession, storeDir: String,
-      uptoBatch: Long): Unit = {
-    require(uptoBatch >= 0, s"compactMediaStore: uptoBatch=$uptoBatch")
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def exists(dir: String): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(dir))
-    val metaDir = s"$storeDir/meta"
-    require(exists(metaDir),
-      s"compactMediaStore: $metaDir missing — not a media admission " +
-        "store (the meta table pins the index schemas; inference " +
-        "over possibly-empty partitions is unsafe)")
-    val meta = spark.read.parquet(metaDir).first()
-    def schemaOf(field: String): org.apache.spark.sql.types.StructType =
-      org.apache.spark.sql.types.DataType
-        .fromJson(meta.getAs[String](field))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    def compact(dir: String,
-        schema: org.apache.spark.sql.types.StructType): Unit =
-      if (exists(dir)) {
-        // heal any crashed previous swap, then run the crash-safe
-        // marker-protocol swap ([[swapCompacted]]) — no crash point
-        // silently loses admission-index rows
-        recoverCompactSwap(fs, dir)
-        val old = spark.read
-          .schema(schema.add(org.apache.spark.sql.types.StructField(
-            "batch", org.apache.spark.sql.types.LongType)))
-          .parquet(dir)
-          .filter(col("batch") <= uptoBatch)
-        // bounded collect: one Long per store partition (<= #batches
-        // ever committed), a partition-id listing — not a data path
-        val oldParts = old.select(col("batch"))
-          .distinct().collect().map(_.getLong(0))
-        if (oldParts.nonEmpty)
-          swapCompacted(fs, dir, old.drop("batch"), oldParts.toSeq)
-      }
-    compact(s"$storeDir/fps", schemaOf("fps_schema"))
-    compact(s"$storeDir/bands", schemaOf("bands_schema"))
-    // a video store ([[toVideoCorpusStore]]) carries a third index —
-    // the (doc, frame_fp) containment-verify side; a captioned-image
-    // store ([[toCaptionedImageCorpusStore]]) carries the caption
-    // shingle postings. Each store's meta pins its extra schema,
-    // which is how the compactor knows what's there.
-    if (meta.schema.fieldNames.contains("frames_schema"))
-      compact(s"$storeDir/frames", schemaOf("frames_schema"))
-    if (meta.schema.fieldNames.contains("postings_schema"))
-      compact(s"$storeDir/postings", schemaOf("postings_schema"))
-  }
+      uptoBatch: Long): Seq[String] =
+    compactStore(spark, storeDir, uptoBatch, "compactMediaStore",
+      "not a media admission store (the meta table pins the index " +
+        "schemas; inference over possibly-empty partitions is " +
+        "unsafe)") { meta =>
+      Seq("fps", "bands", "frames", "postings")
+        .filter(t => meta.schema.fieldNames.contains(s"${t}_schema"))
+        .map(t => IndexTable(t, pinnedSchema(meta, s"${t}_schema")))
+    }
 
   /** The admitted image corpus without the internal batch column. */
   def imageDocs(spark: SparkSession, storeDir: String): DataFrame =

@@ -146,6 +146,18 @@ class CurationSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("2 arguments"))
   }
 
+  test("Sessions: one function list feeds the session extension; AQE " +
+    "partition coalescing stays at Spark's defaults") {
+    import org.apache.spark.sql.internal.SQLConf
+    val names = graft.functions.GraftExtensions.functions.map(_._1)
+    assert(names.distinct.size == names.size)
+    assert(names.forall(spark.catalog.functionExists), names)
+    val conf = spark.sessionState.conf
+    assert(conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+    assert(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) ==
+      64L * 1024 * 1024)
+  }
+
   // ---- dupNgramFraction ----
 
   test("dup-ngram fraction: 1.0 for clones, 0.0 for unique and short") {

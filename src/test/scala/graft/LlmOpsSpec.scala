@@ -539,6 +539,39 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(jumped.size == 64 && jumped.values.forall(_ == 0L))
   }
 
+  test("components keeps the plan behind its result bounded in both " +
+    "modes, whatever probeAfter is") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    // the 64-node path: neither mode converges within the rounds tried
+    // in the loop, so every run returns the labels of its last round
+    val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
+    def joins(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collect { case j: Join => j }.size
+    // a round re-reads the previous round's labels `fanIn` times and
+    // adds `own` joins; a checkpoint truncates the plan every `every`
+    // rounds, so at most `every - 1` rounds stand behind a result:
+    // plain (x2, +2, every 6) holds <= 62 joins, shortcut (x4, +5,
+    // every 3) <= 25
+    def bound(fanIn: Int, own: Int, every: Int): Int =
+      (1 until every).foldLeft(0)((j, _) => own + fanIn * j)
+    for ((shortcut, probeAfter, maxIters) <- Seq((false, 2, 5),
+        (false, 2, 11), (false, 8, 11), (true, 2, 2), (true, 2, 5),
+        (true, 4, 5))) {
+      val comp = graft.llmops.DedupClusters.components(pairs, "a", "b",
+        maxIters = maxIters, probeAfter = probeAfter, shortcut = shortcut)
+      val limit = if (shortcut) bound(4, 5, 3) else bound(2, 2, 6)
+      assert(joins(comp) <= limit, s"shortcut=$shortcut " +
+        s"probeAfter=$probeAfter maxIters=$maxIters: ${joins(comp)} joins")
+    }
+    // a probeAfter above the shortcut cadence still checkpoints, and
+    // the path still closes inside the default round budget
+    val jumped = graft.llmops.DedupClusters
+      .components(pairs, "a", "b", probeAfter = 4, shortcut = true)
+    assert(joins(jumped) <= bound(4, 5, 3))
+    val labels = jumped.collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(labels.length == 64 && labels.forall(_._2 == 0L))
+  }
+
   test("llmops operators are total on empty inputs") {
     val docs = spark.emptyDataset[(Long, String)].toDF("doc_id", "text")
     assert(TextOps.ngramJaccardPairs(docs, "doc_id", "text").count() == 0)

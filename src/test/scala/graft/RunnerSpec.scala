@@ -974,6 +974,22 @@ class RunnerSpec extends AnyFunSuite {
       "in-store" -> store, "upto-batch" -> "1"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(sum == Map("fps" -> 1L, "bands" -> 1L)) // just batch=-1
+    // a URL-rail curated store: the summary names every table the
+    // compactor compacted, urls included
+    val ref = Seq((100L, "a b c d e f")).toDF("id", "body")
+    val model = graft.llmops.LanguageModel.bigramModel(ref, "id", "body")
+    val v = graft.llmops.LanguageModel.refVocabSize(ref, "body")
+    val curated = s"$dir/curated"
+    for (b <- 0L to 1L)
+      graft.streaming.Streams.curatedCommitIndexed(
+        Seq((b + 1, s"doc $b a b c d", s"http://h.org/$b"))
+          .toDF("id", "body", "url"),
+        b, "id", "body", model, v, -1e9, curated, 0.5, 1000, Some("url"))
+    val cur = JobRunner.lakeJobs("compact_admission_index")(s0, Map(
+      "in-store" -> curated, "upto-batch" -> "1"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(cur == Seq("dfs" -> 1L, "postings" -> 1L, "fps" -> 1L,
+      "urls" -> 1L))
     val ex = intercept[IllegalArgumentException] {
       JobRunner.lakeJobs("compact_admission_index")(s0, Map(
         "in-store" -> s"$dir/nostore", "upto-batch" -> "0"))

@@ -669,50 +669,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(Bench.nextSlot(Seq.empty) == 1)
   }
 
-  test("toCuratedCorpusStore: dedup admission + frozen LM gate, " +
-    "replayed batch adds nothing") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-curated").toString
-    val (store, ckpt) = (s"$dir/store", s"$dir/ckpt")
-    def text(tag: String) = (1 to 10).map(i => s"$tag$i").mkString(" ")
-    val textA = text("a"); val textD = text("d"); val textC = text("c")
-    // near-dup of A: final token changed → 7 of 8 trigram shingles
-    // shared, Jaccard 7/9 ≈ 0.78 ≥ 0.5
-    val textA2 = (1 to 9).map(i => s"a$i").mkString(" ") + " zz"
-    // frozen reference model from A+D: seen bigrams score
-    // (1+1)/(1+20) ≈ 0.095, unseen 1/20 = 0.05 — gate at 0.07
-    val ref = Seq((100L, textA), (101L, textD)).toDF("doc_id", "text")
-    val model = graft.llmops.LanguageModel
-      .bigramModel(ref, "doc_id", "text")
-    val v = graft.llmops.LanguageModel.refVocabSize(ref, "text")
-    assert(v == 20L)
-    // non-default column names on purpose: the admissions frame
-    // hardcodes doc_id internally and the store must re-alias
-    val input = MemoryStream[(Long, String)]
-    val q = Streams.toCuratedCorpusStore(
-      input.toDF().toDF("id", "body"), "id", "body",
-      model, v, minScore = 0.07, store, ckpt)
-    def ids() = spark.read.parquet(store)
-      .select("id").as[Long].collect().sorted.toSeq
-    // b1: A admitted; its within-batch twin (9) dropped by the
-    // deterministic min-id keeper; C is out-of-distribution (0.05)
-    input.addData((1L, textA), (9L, textA), (2L, textC))
-    q.processAllAvailable()
-    assert(ids() == Seq(1L))
-    // b2: exact dup of stored A dropped, near-dup A' dropped by the
-    // admission gate, D in-distribution and novel → admitted
-    input.addData((3L, textA), (5L, textA2), (4L, textD))
-    q.processAllAvailable()
-    assert(ids() == Seq(1L, 4L))
-    // b3: replay b2's content (at-least-once delivery) — every doc
-    // finds its earlier copy in the store; nothing appended
-    input.addData((3L, textA), (5L, textA2), (4L, textD))
-    q.processAllAvailable()
-    q.stop()
-    assert(ids() == Seq(1L, 4L))
-  }
-
   // ---- indexed curated store (the 100 TB streaming admission form) --
 
   /** Deterministic mixed corpus for the admission specs: exact dups
@@ -761,27 +717,30 @@ class StreamingSpec extends AnyFunSuite {
   private def docSet(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
     df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
 
-  test("toCuratedCorpusStoreIndexed ≡ toCuratedCorpusStore over the " +
-    "same batch sequence (store-backed admission = recomputed " +
-    "admission), including df-cap interactions") {
+  /** The `batch=<id>` partition directories of a store table, sorted. */
+  private def partitionDirs(dir: String): Seq[String] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("batch=")).sorted
+
+  test("toCuratedCorpusStoreIndexed ≡ the recomputed-admission " +
+    "reference over the same batch sequence, including df-cap " +
+    "interactions") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-curated-eq").toString
     val (batches, model, v, cutoff) = admissionFixture(nBatches = 5, perBatch = 12)
     // tiny df cap so popular shingles cross it mid-sequence — the
     // append-cap / probe-filter interplay is the part worth pinning
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val df = b.toDF("id", "body")
-      Streams.curatedCommit(df, "id", "body", model, v,
-        minScore = cutoff, s"$dir/plain", minJac = 0.5, maxDf = 9)
+    val frames = batches.map(_.toDF("id", "body"))
+    frames.zipWithIndex.foreach { case (df, i) =>
       Streams.curatedCommitIndexed(df, i.toLong, "id", "body", model, v,
         minScore = cutoff, s"$dir/indexed", minJac = 0.5, maxDf = 9)
     }
-    val plain = docSet(spark.read.parquet(s"$dir/plain")
-      .select("id", "body"))
+    val reference = CuratedReference.admit(frames, "id", "body", model,
+      v, minScore = cutoff, minJac = 0.5, maxDf = 9)
     val indexed = docSet(Streams.curatedDocs(spark, s"$dir/indexed")
       .select("id", "body"))
-    assert(plain.nonEmpty && plain.size < batches.flatten.size)
-    assert(indexed == plain)
+    assert(reference.nonEmpty && reference.size < batches.flatten.size)
+    assert(indexed == reference)
   }
 
   test("toCuratedCorpusStoreIndexed streaming wrapper: gates + replay, " +
@@ -1004,10 +963,37 @@ class StreamingSpec extends AnyFunSuite {
     // fails, the meta-pinned read must not
     commit(0, cutoff = 1e9); commit(1, cutoff = 1e9)
     assert(Streams.curatedDocs(spark, store).count() == 0L)
-    Streams.compactAdmissionIndex(spark, store, uptoBatch = 1L)
+    assert(Streams.compactAdmissionIndex(spark, store, uptoBatch = 1L) ==
+      Seq("dfs", "postings", "fps"))
+    // the empty partitions fold too: one history partition per table
+    for (t <- Seq("dfs", "postings", "fps"))
+      assert(partitionDirs(s"$store/$t") == Seq("batch=-1"), t)
     // identical decisions after compaction: a fresh batch admits
     commit(0, cutoff = -1e9)
     assert(Streams.curatedDocs(spark, store).count() > 0L)
+    // a batch that rejects every doc after admissions (a redelivery:
+    // every doc finds its own earlier copy), then compaction up to the
+    // head — on a plain store and on a URL-rail store, whose urls
+    // index must squash too
+    for (rail <- Seq(None, Some("url"))) {
+      val st = s"$dir/redeliver-${rail.isDefined}"
+      val rows = batches(0).map { case (id, body) =>
+        (id, body, s"http://h.org/d$id") }.toDF("id", "body", "url")
+      (0L to 1L).foreach { i =>
+        Streams.curatedCommitIndexed(rows, i, "id", "body", model, v,
+          -1e9, st, 0.5, 9, rail)
+      }
+      val admitted = docSet(Streams.curatedDocs(spark, st)
+        .select("id", "body"))
+      assert(admitted.nonEmpty)
+      val tables = Seq("dfs", "postings", "fps") ++ rail.map(_ => "urls")
+      assert(Streams.compactAdmissionIndex(spark, st, uptoBatch = 1L) ==
+        tables)
+      for (t <- tables)
+        assert(partitionDirs(s"$st/$t") == Seq("batch=-1"), s"$st/$t")
+      assert(docSet(Streams.curatedDocs(spark, st)
+        .select("id", "body")) == admitted)
+    }
     // a commit with a different df cap is refused by the meta check
     val ex = intercept[IllegalArgumentException] {
       commit(1, cutoff = -1e9, cap = 5)
@@ -1775,6 +1761,32 @@ class StreamingSpec extends AnyFunSuite {
       Streams.compactMediaStore(spark, s"$dir/nostore", 0L)
     }
     assert(ex.getMessage.contains("meta"))
+  }
+
+  test("compactMediaStore: a batch that rejects every doc leaves no " +
+    "partition behind; the admitted corpus is unchanged") {
+    import spark.implicits._
+    import graft.llmops.Multimodal
+    val dir = Files.createTempDirectory("graft-medcompact-rej").toString
+    val store = s"$dir/store"
+    val rows = Seq(1L -> 5L, 2L -> 6L).map { case (id, pid) =>
+      (id, Multimodal.encodeWav(Array.tabulate(256)(t =>
+        Multimodal.synthSample(pid, t))), "s")
+    }.toDF("id", "payload", "src")
+    // batch 1 redelivers batch 0: both clips exact-dup their own
+    // admitted copies, so batch 1 writes only empty index partitions
+    (0L to 1L).foreach { b =>
+      Streams.audioCommit(rows, b, "id", "payload", "src", store, 4,
+        window = 4)
+    }
+    def ids() = Streams.audioDocs(spark, store)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(ids() == Seq(1L, 2L))
+    assert(Streams.compactMediaStore(spark, store, uptoBatch = 1L) ==
+      Seq("fps", "bands"))
+    for (t <- Seq("fps", "bands"))
+      assert(partitionDirs(s"$store/$t") == Seq("batch=-1"), t)
+    assert(ids() == Seq(1L, 2L))
   }
 
   test("toAudioCorpusStore streaming wrapper: micro-batches gate " +
