@@ -104,7 +104,7 @@ object ScaleMediaAdmission {
     commit(nBatches.toLong, rows)
     println(f"[$tag] batch $nBatches%2d (post-compaction): " +
       f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-    val n = Streams.audioDocs(spark, store).count()
+    val n = Streams.curatedDocs(spark, store).count()
     println(s"[$tag] admitted $n of ${id}")
     spark.stop()
   }

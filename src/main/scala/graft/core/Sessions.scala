@@ -43,10 +43,12 @@ object Sessions {
       //       stats-poor inputs at cluster scale, set
       //       GRAFT_PREFER_SORT_MERGE=true (restores SMJ preference;
       //       AQE path (a) still converts where measured sizes allow).
+      // Path (a)'s 64 MB threshold is fixed: it is the value the r14
+      // full-suite A/B kept (OPTIMIZATION_r14.md §2b).
       .config("spark.sql.join.preferSortMergeJoin",
         sys.env.getOrElse("GRAFT_PREFER_SORT_MERGE", "false"))
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "64m"))
+        "64m")
       // AQE partition coalescing stays at Spark's defaults
       // (parallelismFirst=true, 64 MB advisory size): the size-based
       // variant was full-suite A/B-tested in r14 and REJECTED — it

@@ -734,20 +734,7 @@ object JobRunner {
         require(fs.exists(p(s"$in/meta")),
           s"store_census: $in has no meta table — not an admission " +
             "store (every store kind pins its contract there)")
-        val meta = s.read.parquet(s"$in/meta").first()
-        val f = meta.schema.fieldNames.toSet
-        val kind =
-          if (f.contains("max_df"))
-            "curated" +
-              (if (f.contains("url_rail") &&
-                meta.getAs[Boolean]("url_rail")) "+url" else "") +
-              (if (f.contains("clf_gate") &&
-                meta.getAs[Boolean]("clf_gate")) "+clf" else "")
-          else if (f.contains("pair_kind"))
-            s"paired:${meta.getAs[String]("pair_kind")}"
-          else if (f.contains("min_jac")) "paired:captioned-image"
-          else if (f.contains("frames_schema")) "media:video"
-          else "media"
+        val kind = graft.streaming.Streams.storeKind(s, in)
         val comps = fs.listStatus(p(in)).filter(_.isDirectory)
           .map(_.getPath.getName)
           .filterNot(n => n == "meta" || n.contains("__compact_"))

@@ -296,6 +296,19 @@ object Streams {
       }
       .start()
 
+  /** The micro-batch runner every Append-mode store shares: checkpoint
+    * at `checkpoint`, skip empty micro-batches, hand each non-empty
+    * one to `commit` with its epoch id. */
+  private def eachBatch(stream: DataFrame, checkpoint: String)(
+      commit: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) commit(batch, batchId)
+      }
+      .start()
+
   /** Stream–static dimension enrichment: join each micro-batch against
     * a broadcast dimension table — the streaming form of every
     * reference job's "join the day's stream to the DBS dims" step
@@ -378,73 +391,99 @@ object Streams {
   def toScdStore(stream: DataFrame, keys: Seq[String],
       compareCols: Seq[String], tsCol: String, currentDir: String,
       historyDir: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val cols = keys ++ compareCols
-          // tsCol desc picks the batch-latest row per key; compareCols
-          // desc break same-timestamp ties so two equal-ts updates in
-          // one micro-batch resolve to ONE deterministic winner (the
-          // repo-wide tieCol convention)
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(keys.map(col): _*)
-            .orderBy(col(tsCol).desc +: compareCols.map(col(_).desc): _*)
-          val latest = batch
-            .select((cols :+ tsCol).map(col): _*)
-            .withColumn("__rk", row_number().over(w))
-            .filter(col("__rk") === 1)
-            .select(cols.map(col): _*)
-          val currentPath = new org.apache.hadoop.fs.Path(currentDir)
-          val prevPath = new org.apache.hadoop.fs.Path(currentDir + "__prev")
-          val hconf = spark.sparkContext.hadoopConfiguration
-          val fs = currentPath.getFileSystem(hconf)
-          // Bootstrap tolerates ONLY a missing store: first batch, or a
-          // crash between the two swap renames below (then __prev still
-          // holds the last complete state). Any read failure on an
-          // EXISTING path (corrupt footer, permissions, transient FS
-          // error) propagates — substituting an empty frame there would
-          // silently reset the store and re-emit every key as 'added'.
-          def readStore(p: org.apache.hadoop.fs.Path): Option[DataFrame] =
-            if (fs.exists(p))
-              Some(spark.read.parquet(p.toString).select(cols.map(col): _*))
-            else None
-          val current = readStore(currentPath)
-            .orElse(readStore(prevPath))
-            .getOrElse(latest.limit(0))
-          val delta = graft.ops.Incremental.snapshotDiff(
-            current, latest, keys, compareCols)
-            .filter(col("status") =!= "removed")
-            .withColumn("batch_id", lit(batchId))
-          val nextCurrent = graft.ops.Incremental.applyChanges(
-            current, latest.withColumn("__op", lit("U")),
-            keys, compareCols, "__op")
-          delta.write.mode("append").parquet(historyDir)
-          val tmp = new org.apache.hadoop.fs.Path(currentDir + "__tmp")
-          nextCurrent.write.mode("overwrite").parquet(tmp.toString)
-          // Rename-aside swap: current moves to __prev before tmp moves
-          // in, so at every instant a complete store exists on disk
-          // (current, or __prev during the two-rename window) — unlike
-          // delete-then-rename, where a crash after the delete left
-          // nothing. __prev is dropped only after the new current lands.
-          fs.delete(prevPath, true)
-          if (fs.exists(currentPath)) fs.rename(currentPath, prevPath)
-          fs.rename(tmp, currentPath)
-          fs.delete(prevPath, true)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val cols = keys ++ compareCols
+      // tsCol desc picks the batch-latest row per key; compareCols
+      // desc break same-timestamp ties so two equal-ts updates in
+      // one micro-batch resolve to ONE deterministic winner (the
+      // repo-wide tieCol convention)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(keys.map(col): _*)
+        .orderBy(col(tsCol).desc +: compareCols.map(col(_).desc): _*)
+      val latest = batch
+        .select((cols :+ tsCol).map(col): _*)
+        .withColumn("__rk", row_number().over(w))
+        .filter(col("__rk") === 1)
+        .select(cols.map(col): _*)
+      val fs = storeFs(spark, currentDir)
+      // a missing store (first batch) bootstraps empty — substituting
+      // an empty frame for a failed read would silently reset the
+      // store and re-emit every key as 'added'
+      val current = snapshotOf(fs, currentDir)
+        .map(spark.read.parquet(_).select(cols.map(col): _*))
+        .getOrElse(latest.limit(0))
+      val delta = graft.ops.Incremental.snapshotDiff(
+        current, latest, keys, compareCols)
+        .filter(col("status") =!= "removed")
+        .withColumn("batch_id", lit(batchId))
+      val nextCurrent = graft.ops.Incremental.applyChanges(
+        current, latest.withColumn("__op", lit("U")),
+        keys, compareCols, "__op")
+      delta.write.mode("append").parquet(historyDir)
+      swapAside(fs, currentDir)(
+        nextCurrent.write.mode("overwrite").parquet(_))
+    }
+
+  /** The file system a store directory lives on. */
+  private def storeFs(spark: SparkSession,
+      dir: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Where a rename-aside store ([[swapAside]]) keeps its last
+    * complete state: `dir` itself, or `dir__prev` after a crash
+    * between the swap's two renames; None for a fresh store. `probe`
+    * names the child that must exist (a ledgered store's data table).
+    * Bootstrap tolerates ONLY a missing store: a read failure on an
+    * existing one (corrupt footer, permissions, transient FS error)
+    * propagates to the caller's read. */
+  private def snapshotOf(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      probe: String = ""): Option[String] =
+    Seq(dir, s"${dir}__prev").find(d => fs.exists(
+      new org.apache.hadoop.fs.Path(if (probe.isEmpty) d else s"$d/$probe")))
+
+  /** The rename-aside swap of every snapshot store: `write` fills
+    * `dir__tmp` (it may delete it and throw to abort, leaving the store
+    * untouched), then the current state moves to `dir__prev` before
+    * tmp moves in, so at every instant a complete store exists on disk
+    * (current, or `__prev` during the two-rename window, which
+    * [[snapshotOf]] reads) — unlike delete-then-rename, where a crash
+    * after the delete left nothing. `__prev` is dropped only after the
+    * new state lands. */
+  private def swapAside(fs: org.apache.hadoop.fs.FileSystem, dir: String)(
+      write: String => Unit): Unit = {
+    val (cur, prev, tmp) = (new org.apache.hadoop.fs.Path(dir),
+      new org.apache.hadoop.fs.Path(s"${dir}__prev"),
+      new org.apache.hadoop.fs.Path(s"${dir}__tmp"))
+    write(tmp.toString)
+    fs.delete(prev, true)
+    if (fs.exists(cur)) fs.rename(cur, prev)
+    fs.rename(tmp, cur)
+    fs.delete(prev, true)
+    ()
+  }
+
+  /** Row guard of the coalesce(1) snapshot stores: counts `data` (a
+    * parquet footer-only count of the aside write — no recompute) and,
+    * over `maxRows`, deletes the aside dir `tmp` and throws `tooBig`,
+    * so the swap never happens and the last good store keeps serving. */
+  private def requireBounded(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, tmp: String, data: String,
+      maxRows: Long)(tooBig: Long => String): Unit = {
+    val rows = spark.read.parquet(data).count()
+    if (rows > maxRows) {
+      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+      throw new IllegalStateException(tooBig(rows))
+    }
+  }
 
   /** Shared read-merge-swap cycle of the mergeable-sketch stores:
-    * read the current store (falling back to the rename-aside copy —
-    * bootstrap tolerates only a MISSING store; a read failure on an
-    * existing one propagates, because silently restarting a sketch
-    * from empty is the one error a merge-law store must never make),
-    * merge the batch sketch in, write aside, swap by rename. A
-    * complete store exists on disk at every instant.
+    * read the current store ([[snapshotOf]] — silently restarting a
+    * sketch from empty is the one error a merge-law store must never
+    * make), merge the batch sketch in, write aside, swap by rename
+    * ([[swapAside]]). A complete store exists on disk at every
+    * instant.
     *
     * Boundedness guard: the `coalesce(1)` write is only correct for
     * stores that stay BOUNDED under merge (a sketch's defining
@@ -453,37 +492,23 @@ object Streams {
     * single-threaded write, not an error. So the merged row count is
     * checked against `maxRows` AFTER the aside write (a parquet
     * footer-only count — no recompute) and an oversized merge fails
-    * fast with the store untouched: the aside dir is deleted and the
-    * swap never happens, so the last good store keeps serving. */
+    * fast with the store untouched ([[requireBounded]]). */
   private def upsertSketchStore(spark: SparkSession, storeDir: String,
       batchSketch: DataFrame, maxRows: Long)(
       merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val prevPath = new org.apache.hadoop.fs.Path(storeDir + "__prev")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = storePath.getFileSystem(hconf)
-    def readStore(p: org.apache.hadoop.fs.Path): Option[DataFrame] =
-      if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-    val merged = readStore(storePath).orElse(readStore(prevPath))
-      .map(cur => merge(cur, batchSketch))
+    val fs = storeFs(spark, storeDir)
+    val merged = snapshotOf(fs, storeDir)
+      .map(cur => merge(spark.read.parquet(cur), batchSketch))
       .getOrElse(batchSketch)
-    val tmp = new org.apache.hadoop.fs.Path(storeDir + "__tmp")
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val mergedRows = spark.read.parquet(tmp.toString).count()
-    if (mergedRows > maxRows) {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        s"sketch store $storeDir would grow to $mergedRows rows " +
+    swapAside(fs, storeDir) { tmp =>
+      merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+      requireBounded(spark, fs, tmp, tmp, maxRows)(rows =>
+        s"sketch store $storeDir would grow to $rows rows " +
           s"(cap $maxRows): the merged frame is not bounded — this " +
           "store family coalesces to one file and must stay " +
           "sketch-sized; raise maxStoreRows only if the store is " +
           "genuinely bounded by construction")
     }
-    fs.delete(prevPath, true)
-    if (fs.exists(storePath)) fs.rename(storePath, prevPath)
-    fs.rename(tmp, storePath)
-    fs.delete(prevPath, true)
-    ()
   }
 
   /** Default [[upsertSketchStore]] row cap: generous for any genuine
@@ -510,17 +535,11 @@ object Streams {
   def toCmsStore(stream: DataFrame, termCol: String, d: Int, w: Int,
       storeDir: String, checkpoint: String,
       maxStoreRows: Long = DefaultMaxStoreRows): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          mergeCmsBatch(batch.sparkSession, storeDir,
-            graft.llmops.Sketches.countMinBuild(batch, termCol, d, w),
-            batchId, maxStoreRows)
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      mergeCmsBatch(batch.sparkSession, storeDir,
+        graft.llmops.Sketches.countMinBuild(batch, termCol, d, w),
+        batchId, maxStoreRows)
+    }
 
   /** Incrementally maintained quantile-sample store: per micro-batch,
     * build the bottom-k-by-hash sample (Sketches.quantileSampleBuild)
@@ -534,20 +553,14 @@ object Streams {
       keyCol: String, valueCol: String, k: Int,
       storeDir: String, checkpoint: String,
       maxStoreRows: Long = DefaultMaxStoreRows): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          upsertSketchStore(batch.sparkSession, storeDir,
-            graft.llmops.Sketches
-              .quantileSampleBuild(batch, groupCol, keyCol, valueCol, k),
-            maxStoreRows)(
-            (cur, b) => graft.llmops.Sketches
-              .quantileSampleMerge(cur, b, groupCol, k))
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      upsertSketchStore(batch.sparkSession, storeDir,
+        graft.llmops.Sketches
+          .quantileSampleBuild(batch, groupCol, keyCol, valueCol, k),
+        maxStoreRows)(
+        (cur, b) => graft.llmops.Sketches
+          .quantileSampleMerge(cur, b, groupCol, k))
+    }
 
   /** Incrementally maintained Bloom bit-set store: per micro-batch,
     * the batch keys' set positions (`Sketches.bloomBuild`, ≤ m rows)
@@ -562,18 +575,12 @@ object Streams {
   def toBloomStore(stream: DataFrame, keyCol: String, m: Int, h: Int,
       storeDir: String, checkpoint: String,
       maxStoreRows: Long = DefaultMaxStoreRows): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          upsertSketchStore(batch.sparkSession, storeDir,
-            graft.llmops.Sketches.bloomBuild(batch, keyCol, m, h),
-            maxStoreRows)(
-            graft.llmops.Sketches.bloomMerge)
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      upsertSketchStore(batch.sparkSession, storeDir,
+        graft.llmops.Sketches.bloomBuild(batch, keyCol, m, h),
+        maxStoreRows)(
+        graft.llmops.Sketches.bloomMerge)
+    }
 
   /** Incrementally maintained group-MinHash store: per micro-batch,
     * the per-group signature (`TextOps.groupMinhash`) merges into the
@@ -588,20 +595,14 @@ object Streams {
       textCol: String, groupCol: String, storeDir: String,
       checkpoint: String,
       maxStoreRows: Long = DefaultMaxStoreRows): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          upsertSketchStore(batch.sparkSession, storeDir,
-            graft.llmops.TextOps
-              .groupMinhash(batch, idCol, textCol, groupCol),
-            maxStoreRows)(
-            (cur, b) => graft.llmops.TextOps
-              .groupMinhashMerge(cur, b, groupCol))
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      upsertSketchStore(batch.sparkSession, storeDir,
+        graft.llmops.TextOps
+          .groupMinhash(batch, idCol, textCol, groupCol),
+        maxStoreRows)(
+        (cur, b) => graft.llmops.TextOps
+          .groupMinhashMerge(cur, b, groupCol))
+    }
 
   /** Incrementally maintained LM-score-band store: per micro-batch,
     * score docs against a FROZEN reference model
@@ -628,20 +629,14 @@ object Streams {
       textCol: String, langCol: String, model: DataFrame,
       vocabSize: Long, storeDir: String, checkpoint: String,
       maxStoreRows: Long = DefaultMaxStoreRows): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val bands = graft.llmops.LanguageModel.bandHistogram(
-            graft.llmops.LanguageModel.lmScoreFrozen(batch, model,
-              vocabSize, idCol, textCol, carryCols = Seq(langCol)),
-            langCol)
-          mergeScoreBandBatch(batch.sparkSession, storeDir, bands,
-            batchId, langCol, maxStoreRows)
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val bands = graft.llmops.LanguageModel.bandHistogram(
+        graft.llmops.LanguageModel.lmScoreFrozen(batch, model,
+          vocabSize, idCol, textCol, carryCols = Seq(langCol)),
+        langCol)
+      mergeScoreBandBatch(batch.sparkSession, storeDir, bands,
+        batchId, langCol, maxStoreRows)
+    }
 
   /** Exactly-once read-merge-swap cycle for stores whose merge law is
     * NOT idempotent (additive counters: the score-band histogram, the
@@ -671,49 +666,31 @@ object Streams {
       batchData: DataFrame, batchId: Long, dataName: String,
       maxRows: Long, oversizeHint: String)(
       merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val prevPath = new org.apache.hadoop.fs.Path(storeDir + "__prev")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = storePath.getFileSystem(hconf)
-    def readStore(p: org.apache.hadoop.fs.Path)
-        : Option[(DataFrame, DataFrame)] =
-      if (fs.exists(new org.apache.hadoop.fs.Path(p, dataName)))
-        Some((spark.read.parquet(s"$p/$dataName"),
-          spark.read.parquet(s"$p/batches")))
-      else None
-    val existing = readStore(storePath).orElse(readStore(prevPath))
+    val fs = storeFs(spark, storeDir)
+    val existing = snapshotOf(fs, storeDir, dataName)
     // high-water mark of merged epochs (None for a fresh store); the
     // ledger read is a one-row (or legacy bounded) file, never data
-    val highWater: Option[Long] = existing.flatMap { case (_, ledger) =>
-      Option(ledger.agg(max(col("batch_id"))).first().get(0))
+    val highWater: Option[Long] = existing.flatMap { dir =>
+      Option(spark.read.parquet(s"$dir/batches")
+        .agg(max(col("batch_id"))).first().get(0))
         .map(_.asInstanceOf[Long])
     }
-    val alreadyMerged = highWater.exists(batchId <= _)
-    if (!alreadyMerged) {
+    if (!highWater.exists(batchId <= _)) {
       import spark.implicits._
-      val merged = existing match {
-        case Some((cur, _)) => merge(cur, batchData)
-        case None => batchData
-      }
+      val merged = existing
+        .map(dir => merge(spark.read.parquet(s"$dir/$dataName"), batchData))
+        .getOrElse(batchData)
       val ledger = Seq(math.max(batchId, highWater.getOrElse(Long.MinValue)))
         .toDF("batch_id")
-      val tmp = new org.apache.hadoop.fs.Path(storeDir + "__tmp")
-      merged.coalesce(1).write.mode("overwrite")
-        .parquet(s"$tmp/$dataName")
-      ledger.coalesce(1).write.mode("overwrite").parquet(s"$tmp/batches")
-      val mergedRows = spark.read.parquet(s"$tmp/$dataName").count()
-      if (mergedRows > maxRows) {
-        fs.delete(tmp, true)
-        throw new IllegalStateException(
-          s"store $storeDir would grow to $mergedRows rows " +
+      swapAside(fs, storeDir) { tmp =>
+        merged.coalesce(1).write.mode("overwrite")
+          .parquet(s"$tmp/$dataName")
+        ledger.coalesce(1).write.mode("overwrite").parquet(s"$tmp/batches")
+        requireBounded(spark, fs, tmp, s"$tmp/$dataName", maxRows)(rows =>
+          s"store $storeDir would grow to $rows rows " +
             s"(cap $maxRows): $oversizeHint — this store coalesces " +
             "to one file and must stay bounded")
       }
-      fs.delete(prevPath, true)
-      if (fs.exists(storePath)) fs.rename(storePath, prevPath)
-      fs.rename(tmp, storePath)
-      fs.delete(prevPath, true)
-      ()
     }
   }
 
@@ -744,17 +721,12 @@ object Streams {
   def toClassCountsStore(stream: DataFrame, keyCols: Seq[String],
       storeDir: String, checkpoint: String,
       maxRows: Long = DefaultMaxStoreRows): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeClassCountsBatch(batch.sparkSession, storeDir,
-            batch.groupBy(keyCols.map(col): _*)
-              .agg(count(lit(1)).as("n_true")),
-            batchId, keyCols, maxRows)
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      mergeClassCountsBatch(batch.sparkSession, storeDir,
+        batch.groupBy(keyCols.map(col): _*)
+          .agg(count(lit(1)).as("n_true")),
+        batchId, keyCols, maxRows)
+    }
 
   /** One exactly-once merge cycle of [[toClassCountsStore]] (data
     * subdir: `counts`), factored for spec-driven replays. */
@@ -802,18 +774,12 @@ object Streams {
       scoreCol: String, scaleTo: Int, calibBuckets: Int,
       storeDir: String, checkpoint: String,
       maxStoreRows: Long = DefaultMaxStoreRows): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val vh = graft.llmops.Drift.calibHistogram(batch, idCol,
-            scoreCol, scaleTo, calibBuckets)
-          mergeConformalBatch(batch.sparkSession, storeDir, vh,
-            batchId, maxStoreRows)
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val vh = graft.llmops.Drift.calibHistogram(batch, idCol,
+        scoreCol, scaleTo, calibBuckets)
+      mergeConformalBatch(batch.sparkSession, storeDir, vh,
+        batchId, maxStoreRows)
+    }
 
   /** One exactly-once merge cycle of [[toConformalStore]] (data
     * subdir: `calib`), factored for spec-driven replays. */
@@ -934,16 +900,9 @@ object Streams {
       minJac: Double = 0.5, maxDf: Int = 1000,
       urlCol: Option[String] = None,
       clfGate: Option[TrainedGate] = None): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty)
-          curatedCommitIndexed(batch0, batchId, idCol, textCol, model,
-            vocabSize, minScore, storeDir, minJac, maxDf, urlCol,
-            clfGate)
-      }
-      .start()
+    eachBatch(stream, checkpoint)(curatedCommitIndexed(_, _, idCol,
+      textCol, model, vocabSize, minScore, storeDir, minJac, maxDf,
+      urlCol, clfGate))
 
   /** A trained-quality gate for the streaming admission path — the
     * incremental counterpart of `corpus_release_export
@@ -984,59 +943,38 @@ object Streams {
       (s"$storeDir/docs", s"$storeDir/fps", s"$storeDir/postings",
         s"$storeDir/dfs")
     val urlsDir = s"$storeDir/urls"
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = storeFs(s, storeDir)
     requireNoPendingCompaction(fs, "curatedCommitIndexed",
       Seq(fpsDir, postingsDir, dfsDir) ++
         (if (urlCol.isDefined) Seq(urlsDir) else Nil))
-    // the store's one-row meta table pins the df cap (and the index
-    // schemas, for schema-safe offline reads): admission decisions
-    // depend on maxDf, so a stream restarted — or a compaction run —
-    // with a different cap must fail fast, not silently diverge.
-    // The URL rail is part of the same contract: a store created
-    // with it cannot be committed to without it (URL-dup docs would
-    // silently start flowing in), and vice versa.
-    val metaDir = s"$storeDir/meta"
-    if (fs.exists(new org.apache.hadoop.fs.Path(metaDir))) {
-      val meta = s.read.parquet(metaDir).first()
-      val storedDf = meta.getAs[Int]("max_df")
-      require(storedDf == maxDf,
-        s"curatedCommitIndexed: store $storeDir was created with " +
-          s"maxDf=$storedDf but this commit uses maxDf=$maxDf — the " +
-          "df cap is part of the store's admission contract")
-      // pre-r12 stores have no url_rail column = rail off
-      val storedRail = meta.schema.fieldNames.contains("url_rail") &&
-        meta.getAs[Boolean]("url_rail")
-      require(storedRail == urlCol.isDefined,
-        s"curatedCommitIndexed: store $storeDir was created with " +
-          s"url_rail=$storedRail but this commit uses " +
-          s"url_rail=${urlCol.isDefined} — the URL rail is part of " +
-          "the store's admission contract")
-      // pre-r14 stores have no clf_gate column = gate off. The gate
-      // (and the exact weight table behind it) is part of the
-      // admission contract: a replay or restart under drifted
-      // weights would silently change which docs the store admits
-      val storedClf = meta.schema.fieldNames.contains("clf_gate") &&
-        meta.getAs[Boolean]("clf_gate")
-      require(storedClf == clfGate.isDefined,
-        s"curatedCommitIndexed: store $storeDir was created with " +
-          s"clf_gate=$storedClf but this commit uses " +
-          s"clf_gate=${clfGate.isDefined} — the trained gate is " +
-          "part of the store's admission contract")
-      clfGate.foreach { g =>
-        val (sfp, smm, sb) = (meta.getAs[Long]("clf_fp"),
-          meta.getAs[Double]("clf_min_margin"),
-          meta.getAs[Int]("clf_buckets"))
-        val fp = weightsFingerprint(g.weights)
-        require(sfp == fp && smm == g.minMargin && sb == g.buckets,
-          s"curatedCommitIndexed: store $storeDir pins trained gate " +
-            s"(weights_fp=$sfp, minMargin=$smm, buckets=$sb) but " +
-            s"this commit carries (weights_fp=$fp, " +
-            s"minMargin=${g.minMargin}, buckets=${g.buckets}) — " +
-            "the weight table drifted; retrain into a NEW store or " +
-            "re-point the stream at the pinned weights")
-      }
-    }
+    // admission decisions depend on maxDf, so a stream restarted — or
+    // a compaction run — with a different cap must fail fast, not
+    // silently diverge. A store created with the URL rail cannot be
+    // committed to without it (URL-dup docs would silently start
+    // flowing in), and vice versa; pre-r12 stores have no url_rail
+    // column (rail off). The trained gate and the exact weight table
+    // behind it are pinned too (pre-r14 stores: gate off): a replay
+    // or restart under drifted weights would silently change which
+    // docs the store admits.
+    val gateOn = "the trained gate is part of the store's admission " +
+      "contract"
+    val meta = new StoreMeta(s, fs, storeDir, "curatedCommitIndexed",
+      "toCuratedCorpusStoreIndexed", Seq(
+        Pin("max_df", "maxDf", maxDf, None,
+          "the df cap is part of the store's admission contract"),
+        SchemaOf("fps"), SchemaOf("postings"), SchemaOf("dfs"),
+        Pin("url_rail", "url_rail", urlCol.isDefined, Some(false),
+          "the URL rail is part of the store's admission contract"),
+        Pin("clf_gate", "clf_gate", clfGate.isDefined, Some(false),
+          gateOn),
+        Pin("clf_fp", "weights_fp",
+          clfGate.map(g => weightsFingerprint(g.weights)).getOrElse(0L),
+          Some(0L), "the weight table drifted; retrain into a NEW " +
+            "store or re-point the stream at the pinned weights"),
+        Pin("clf_min_margin", "minMargin",
+          clfGate.map(_.minMargin).getOrElse(0.0), Some(0.0), gateOn),
+        Pin("clf_buckets", "buckets", clfGate.map(_.buckets).getOrElse(0),
+          Some(0), gateOn)))
     val part = new BatchParts(fs, batchId)
     // within-batch URL-first collapse (rail on): min-id keeper per
     // canonical URL — the web-pipeline ordering, recrawl decorations
@@ -1145,20 +1083,8 @@ object Streams {
     val keepSh = dfOut.join(dfStore, Seq("sh"), "left")
       .filter(col("df") + coalesce(col("df_s"), lit(0L)) <= maxDf)
       .select(col("sh"))
-    // first commit stamps the meta table (cap + index schemas); a
-    // crash-replay re-stamps identical content, so no swap is needed
-    if (!fs.exists(new org.apache.hadoop.fs.Path(metaDir))) {
-      import s.implicits._
-      Seq((maxDf, fpTemplate.schema.json, batchPostings.schema.json,
-        dfTemplate.schema.json, urlCol.isDefined, clfGate.isDefined,
-        clfGate.map(g => weightsFingerprint(g.weights)).getOrElse(0L),
-        clfGate.map(_.minMargin).getOrElse(0.0),
-        clfGate.map(_.buckets).getOrElse(0)))
-        .toDF("max_df", "fps_schema", "postings_schema", "dfs_schema",
-          "url_rail", "clf_gate", "clf_fp", "clf_min_margin",
-          "clf_buckets")
-        .coalesce(1).write.mode("overwrite").parquet(metaDir)
-    }
+    meta.stamp("fps" -> fpTemplate, "postings" -> batchPostings,
+      "dfs" -> dfTemplate)
     part.write(out, docsDir)
     part.write(out.select(md5(col(textCol)).as("fp")), fpsDir)
     urlCol.foreach { uc =>
@@ -1172,8 +1098,9 @@ object Streams {
     ()
   }
 
-  /** The curated corpus of a [[toCuratedCorpusStoreIndexed]] store,
-    * without the internal batch partition column. */
+  /** The admitted corpus of any admission store here (curated, image,
+    * audio, video or paired), without the internal batch partition
+    * column. */
   def curatedDocs(spark: SparkSession, storeDir: String): DataFrame =
     spark.read.parquet(s"$storeDir/docs").drop("batch")
 
@@ -1212,6 +1139,92 @@ object Streams {
       .schema(schema.add(org.apache.spark.sql.types.StructField("batch",
         org.apache.spark.sql.types.LongType)))
       .parquet(dir)
+
+  /** A column of an admission store's one-row meta table: a [[Pin]] of
+    * the admission contract, or a [[SchemaOf]] an index table. */
+  private sealed trait MetaCol { def column: String }
+
+  /** One pinned parameter of a store's admission contract: its meta
+    * `column`, the `param` name errors show, this commit's `value`, what
+    * a legacy store without the column reads as (None: the column marks
+    * the store family, so a store without it is refused as another kind
+    * of store), and `why` it is pinned. A `modality` pin (what the store
+    * holds) is checked before every threshold. */
+  private final case class Pin(column: String, param: String, value: Any,
+      legacy: Option[Any], why: String, modality: Boolean = false)
+      extends MetaCol
+
+  /** The schema of index table `table`, pinned as its JSON for
+    * schema-safe offline reads (compaction reads partitions that may
+    * all be empty). */
+  private final case class SchemaOf(table: String) extends MetaCol {
+    def column: String = s"${table}_schema"
+  }
+
+  /** The one-row meta table of an admission store of `family`:
+    * `contract` lists its columns in order. The row is read once, here;
+    * a stored row whose pins disagree with this commit's values refuses
+    * the commit, before any work. [[stamp]] writes the row on the first
+    * commit. */
+  private final class StoreMeta(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, storeDir: String,
+      caller: String, family: String, contract: Seq[MetaCol]) {
+    private val dir = s"$storeDir/meta"
+    /** The stored row; None before the first commit. */
+    val row: Option[org.apache.spark.sql.Row] =
+      if (fs.exists(new org.apache.hadoop.fs.Path(dir)))
+        Some(spark.read.parquet(dir).first())
+      else None
+    row.foreach { m =>
+      val has = m.schema.fieldNames.toSet
+      val pins = contract.collect { case p: Pin => p }
+      for (p <- pins if p.legacy.isEmpty)
+        require(has(p.column), s"$caller: $storeDir is not a " +
+          s"$family store (meta pins no ${p.column} — committing " +
+          "another kind of batch into the store would silently corrupt " +
+          "its admission index)")
+      pins.sortBy(!_.modality).foreach { p =>
+        val stored =
+          if (has(p.column)) m.getAs[Any](p.column) else p.legacy.get
+        require(stored == p.value,
+          s"$caller: store $storeDir was created with " +
+            s"${p.param}=$stored but this commit uses " +
+            s"${p.param}=${p.value} — ${p.why}")
+      }
+    }
+
+    /** Write the row on the first commit; `templates` name each
+      * [[SchemaOf]] table's frame. A crash-replay re-stamps identical
+      * content, so no swap is needed. */
+    def stamp(templates: (String, DataFrame)*): Unit =
+      if (row.isEmpty) {
+        val template = templates.toMap
+        spark.range(1).select(contract.map {
+          case p: Pin => lit(p.value).as(p.column)
+          case t: SchemaOf =>
+            lit(template(t.table).schema.json).as(t.column)
+        }: _*).coalesce(1).write.mode("overwrite").parquet(dir)
+      }
+  }
+
+  /** What kind of admission store `storeDir` is, from its meta row:
+    * `curated` (`+url`, `+clf`), `media:image|audio|video` (`media` for
+    * an image or audio store that predates `media_kind`) or
+    * `paired:<pair kind>`. */
+  def storeKind(spark: SparkSession, storeDir: String): String = {
+    val m = spark.read.parquet(s"$storeDir/meta").first()
+    def has(c: String) = m.schema.fieldNames.contains(c)
+    def on(c: String) = has(c) && m.getAs[Boolean](c)
+    if (has("max_df"))
+      "curated" + (if (on("url_rail")) "+url" else "") +
+        (if (on("clf_gate")) "+clf" else "")
+    else if (has("min_jac"))
+      "paired:" + (if (has("pair_kind")) m.getAs[String]("pair_kind")
+        else "captioned-image")
+    else if (has("min_containment")) "media:video"
+    else if (has("media_kind")) s"media:${m.getAs[String]("media_kind")}"
+    else "media"
+  }
 
   /** An index schema pinned in a store's meta row (`field` holds its
     * JSON). */
@@ -1460,15 +1473,8 @@ object Streams {
   def toImageCorpusStore(stream: DataFrame, idCol: String,
       payloadCol: String, sourceCol: String, storeDir: String,
       checkpoint: String, maxHamming: Int = 4): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty)
-          imageCommit(batch0, batchId, idCol, payloadCol, sourceCol,
-            storeDir, maxHamming)
-      }
-      .start()
+    eachBatch(stream, checkpoint)(imageCommit(_, _, idCol, payloadCol,
+      sourceCol, storeDir, maxHamming))
 
   /** One admission cycle of [[toImageCorpusStore]], factored out for
     * spec-driven batch sequences and replays: ONE decode yields both
@@ -1477,7 +1483,7 @@ object Streams {
       idCol: String, payloadCol: String, sourceCol: String,
       storeDir: String, maxHamming: Int): Unit =
     mediaCommit(batch0, batchId, idCol, payloadCol, sourceCol,
-      storeDir, maxHamming, "imageCommit")(media =>
+      storeDir, maxHamming, "imageCommit", "image")(media =>
       graft.llmops.Multimodal.imageSignatures(media).toDF()
         .filter(col("pix_fp").isNotNull)
         .select(col("doc_id"), col("pix_fp").as("fp"),
@@ -1492,7 +1498,7 @@ object Streams {
       idCol: String, payloadCol: String, sourceCol: String,
       storeDir: String, maxHamming: Int, window: Int): Unit =
     mediaCommit(batch0, batchId, idCol, payloadCol, sourceCol,
-      storeDir, maxHamming, "audioCommit")(media =>
+      storeDir, maxHamming, "audioCommit", "audio")(media =>
       graft.llmops.Multimodal.audioEnvelopeHash(media, window).toDF()
         .filter(col("env_hash").isNotNull)
         .select(col("doc_id"), col("env_hash").as("fp"),
@@ -1514,37 +1520,31 @@ object Streams {
     * writes overwrite only the current id's partitions — a replayed
     * epoch re-derives the identical admission and overwrites itself,
     * even over a crashed multi-store first attempt. A one-row meta
-    * table pins `maxHamming` and the index schemas. */
+    * table pins `maxHamming`, the modality (`media_kind`: an image and
+    * an audio store have the same index schemas, so nothing else would
+    * stop one modality's hashes being probed against the other's) and
+    * the index schemas. */
   private def mediaCommit(batch0: DataFrame, batchId: Long,
       idCol: String, payloadCol: String, sourceCol: String,
-      storeDir: String, maxHamming: Int, caller: String)(
+      storeDir: String, maxHamming: Int, caller: String, kind: String)(
       sign: org.apache.spark.sql.Dataset[
         graft.llmops.Multimodal.MediaRecord] => DataFrame): Unit = {
     import graft.core.Checkpoints.BarrierOps
     val s = batch0.sparkSession
-    import s.implicits._
     val (docsDir, fpsDir, bandsDir) =
       (s"$storeDir/docs", s"$storeDir/fps", s"$storeDir/bands")
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = storeFs(s, storeDir)
     requireNoPendingCompaction(fs, caller, Seq(fpsDir, bandsDir))
-    val metaDir = s"$storeDir/meta"
-    if (fs.exists(new org.apache.hadoop.fs.Path(metaDir))) {
-      val stored = s.read.parquet(metaDir).first()
-        .getAs[Int]("max_hamming")
-      require(stored == maxHamming,
-        s"$caller: store $storeDir was created with " +
-          s"maxHamming=$stored but this commit uses $maxHamming — " +
-          "the threshold is part of the store's admission contract")
-    }
+    // a store without media_kind predates the pin: accepted as any kind
+    val meta = new StoreMeta(s, fs, storeDir, caller, "media corpus", Seq(
+      Pin("max_hamming", "maxHamming", maxHamming, None,
+        "the threshold is part of the store's admission contract"),
+      SchemaOf("fps"), SchemaOf("bands"),
+      Pin("media_kind", "media_kind", kind, Some(kind),
+        "one modality per store", modality = true)))
     val part = new BatchParts(fs, batchId)
     // ONE signature pass; undecodable payloads rejected by `sign`
-    val media = batch0.select(
-        col(idCol).cast("long").as("doc_id"),
-        col(payloadCol).as("payload"),
-        col(sourceCol).as("source"),
-        lit(0L).as("n_chars"))
-      .as[graft.llmops.Multimodal.MediaRecord]
+    val media = mediaRecords(batch0, idCol, payloadCol, sourceCol)
     val sigs = sign(media).barrier()
     // within-batch exact dedup, deterministic min-id keeper
     val keep = sigs.groupBy(col("fp"))
@@ -1556,22 +1556,10 @@ object Streams {
       .join(part.read(fpsDir, fpTemplate), Seq("fp"), "left_semi")
       .select(col("doc_id"))
     // near rail: shared 16-bit band + Hamming ≤ maxHamming
-    def bandsOf(df: DataFrame): DataFrame = df.select(
-      col("doc_id"), col("nhash"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("nhash"), b * 16).bitwiseAND(lit(0xffffL))): _*))
-        .as(Seq("band", "bucket")))
     val batchBands = bandsOf(b1).barrier() // store probe + both
     // sides of the within-batch self-join
-    val bandTemplate = batchBands
-    val nearDropped = batchBands
-      .select(col("doc_id"), col("nhash").as("__hb"), col("band"),
-        col("bucket"))
-      .join(part.read(bandsDir, bandTemplate)
-          .select(col("nhash").as("__hs"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .filter(bit_count(col("__hb").bitwiseXOR(col("__hs")))
-        <= maxHamming)
+    val nearDropped = hammingPairs(batchBands,
+        part.read(bandsDir, batchBands), maxHamming, intra = false)
       .select(col("doc_id")).distinct()
     // within-batch near rail: two near-dup (non-fp-identical) media
     // arriving in the SAME micro-batch must not both be admitted
@@ -1581,33 +1569,58 @@ object Streams {
     // chain A~B~C only A survives even where one-at-a-time arrival
     // would also keep C. Per-micro-batch self-join, so pair volume
     // is bounded by the batch, not the corpus.
-    val intraNearDropped = batchBands
-      .select(col("doc_id"), col("nhash").as("__hb"), col("band"),
-        col("bucket"))
-      .join(batchBands.select(col("doc_id").as("__ob"),
-          col("nhash").as("__hs"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .filter(col("__ob") < col("doc_id") &&
-        bit_count(col("__hb").bitwiseXOR(col("__hs"))) <= maxHamming)
+    val intraNearDropped = hammingPairs(batchBands, batchBands,
+        maxHamming, intra = true)
       .select(col("doc_id")).distinct()
     val dropped = exactDropped.unionByName(nearDropped)
       .unionByName(intraNearDropped).distinct()
     val admitted = b1.join(dropped, Seq("doc_id"), "left_anti")
       .barrier() // feeds docs, fps AND bands writes
-    if (!fs.exists(new org.apache.hadoop.fs.Path(metaDir))) {
-      Seq((maxHamming, fpTemplate.schema.json, bandTemplate.schema.json))
-        .toDF("max_hamming", "fps_schema", "bands_schema")
-        .coalesce(1).write.mode("overwrite").parquet(metaDir)
-    }
-    val docsOut = batch0
-      .select(col(idCol).cast("long").as("doc_id"),
-        col(payloadCol).as("payload"), col(sourceCol).as("source"))
+    meta.stamp("fps" -> fpTemplate, "bands" -> batchBands)
+    val docsOut = media.drop("n_chars")
       .join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
     part.write(docsOut, docsDir)
     part.write(admitted.select(col("fp")), fpsDir)
     part.write(bandsOf(admitted), bandsDir)
     ()
   }
+
+  /** A media batch as [[graft.llmops.Multimodal.MediaRecord]]s: the one
+    * projection every media and paired kernel decodes from. */
+  private def mediaRecords(df: DataFrame, idCol: String,
+      payloadCol: String, sourceCol: String)
+      : org.apache.spark.sql.Dataset[graft.llmops.Multimodal.MediaRecord] = {
+    import df.sparkSession.implicits._
+    df.select(
+        col(idCol).cast("long").as("doc_id"),
+        col(payloadCol).as("payload"),
+        col(sourceCol).as("source"),
+        lit(0L).as("n_chars"))
+      .as[graft.llmops.Multimodal.MediaRecord]
+  }
+
+  /** The 4×16-bit bands of a 64-bit near-dup hash: one
+    * (doc_id, nhash, band, bucket) row per band. */
+  private def bandsOf(df: DataFrame): DataFrame = df.select(
+    col("doc_id"), col("nhash"),
+    posexplode(array((0 until 4).map(b =>
+      shiftright(col("nhash"), b * 16).bitwiseAND(lit(0xffffL))): _*))
+      .as(Seq("band", "bucket")))
+
+  /** Near-rail candidates: each batch doc of `batchBands` against the
+    * docs `ob` of `other` (a store's bands, or with `intra` the batch
+    * itself, smaller ids only) that share a band and lie within
+    * `maxHamming` bits. Pairs repeat once per shared band. */
+  private def hammingPairs(batchBands: DataFrame, other: DataFrame,
+      maxHamming: Int, intra: Boolean): DataFrame =
+    batchBands
+      .select(col("doc_id"), col("nhash").as("__hb"), col("band"),
+        col("bucket"))
+      .join(other.select(col("doc_id").as("ob"),
+        col("nhash").as("__hs"), col("band"), col("bucket")),
+        Seq("band", "bucket"))
+      .filter((if (intra) col("ob") < col("doc_id") else lit(true))
+        && bit_count(col("__hb").bitwiseXOR(col("__hs"))) <= maxHamming)
 
   /** Streaming AUDIO corpus ingest with incremental near-dup
     * admission — the acoustic form of [[toImageCorpusStore]], same
@@ -1619,15 +1632,8 @@ object Streams {
       payloadCol: String, sourceCol: String, storeDir: String,
       checkpoint: String, maxHamming: Int = 4, window: Int = 4)
       : StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty)
-          audioCommit(batch0, batchId, idCol, payloadCol, sourceCol,
-            storeDir, maxHamming, window)
-      }
-      .start()
+    eachBatch(stream, checkpoint)(audioCommit(_, _, idCol, payloadCol,
+      sourceCol, storeDir, maxHamming, window))
 
   /** Streaming VIDEO corpus ingest with incremental near-dup
     * admission — the third modality beside [[toImageCorpusStore]]
@@ -1667,15 +1673,8 @@ object Streams {
       frameBytes: Int = 16,
       maxBucket: Int = graft.llmops.TextOps.DefaultMaxBucket)
       : StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty)
-          videoCommit(batch0, batchId, idCol, payloadCol, sourceCol,
-            storeDir, minContainment, frameBytes, maxBucket)
-      }
-      .start()
+    eachBatch(stream, checkpoint)(videoCommit(_, _, idCol, payloadCol,
+      sourceCol, storeDir, minContainment, frameBytes, maxBucket))
 
   /** One admission cycle of [[toVideoCorpusStore]], factored out for
     * spec-driven batch sequences and replays. */
@@ -1690,40 +1689,26 @@ object Streams {
     require(frameBytes >= 1, s"videoCommit: frameBytes=$frameBytes")
     require(maxBucket >= 1, s"videoCommit: maxBucket=$maxBucket")
     val s = batch0.sparkSession
-    import s.implicits._
     val (docsDir, fpsDir, bandsDir, framesDir) =
       (s"$storeDir/docs", s"$storeDir/fps", s"$storeDir/bands",
         s"$storeDir/frames")
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = storeFs(s, storeDir)
     requireNoPendingCompaction(fs, "videoCommit",
       Seq(fpsDir, bandsDir, framesDir))
-    val metaDir = s"$storeDir/meta"
-    if (fs.exists(new org.apache.hadoop.fs.Path(metaDir))) {
-      val m = s.read.parquet(metaDir).first()
-      require(m.schema.fieldNames.contains("min_containment"),
-        s"videoCommit: $storeDir is not a video corpus store (meta " +
-          "pins no min_containment — committing a different modality " +
-          "into the store would silently corrupt its admission index)")
-      val (sc, sf, sb) = (m.getAs[Double]("min_containment"),
-        m.getAs[Int]("frame_bytes"), m.getAs[Int]("max_bucket"))
-      require(sc == minContainment && sf == frameBytes &&
-        sb == maxBucket,
-        s"videoCommit: store $storeDir was created with " +
-          s"(minContainment=$sc, frameBytes=$sf, maxBucket=$sb) but " +
-          s"this commit uses ($minContainment, $frameBytes, " +
-          s"$maxBucket) — all three are part of the store's " +
-          "admission contract")
-    }
+    val contract = "part of the store's admission contract"
+    val meta = new StoreMeta(s, fs, storeDir, "videoCommit",
+      "video corpus", Seq(
+        Pin("min_containment", "minContainment", minContainment, None,
+          s"the containment threshold is $contract"),
+        Pin("frame_bytes", "frameBytes", frameBytes, None,
+          s"the frame size is $contract"),
+        Pin("max_bucket", "maxBucket", maxBucket, None,
+          s"the bucket cap is $contract"),
+        SchemaOf("fps"), SchemaOf("bands"), SchemaOf("frames")))
     val part = new BatchParts(fs, batchId)
     // ONE frame pass; clips shorter than one frame emit no rows and
     // are thereby rejected
-    val media = batch0.select(
-        col(idCol).cast("long").as("doc_id"),
-        col(payloadCol).as("payload"),
-        col(sourceCol).as("source"),
-        lit(0L).as("n_chars"))
-      .as[Multimodal.MediaRecord]
+    val media = mediaRecords(batch0, idCol, payloadCol, sourceCol)
     val d0 = Multimodal.frameFingerprints(media, frameBytes)
       .select(col("doc_id"), col("frame_fp")).distinct().barrier()
     // ONE aggregation yields the set fingerprint (exact rail), the
@@ -1747,8 +1732,7 @@ object Streams {
       .select(col("doc_id"), posexplode(array(
         col("sig_0"), col("sig_1"), col("sig_2"), col("sig_3")))
         .as(Seq("band", "bucket")))
-    val bandTemplate = batchBands
-    val storedBands = part.read(bandsDir, bandTemplate)
+    val storedBands = part.read(bandsDir, batchBands)
       .barrier() // bucket-cap count + candidate probe
     // boilerplate guard: a stored bucket over maxBucket proposes no
     // candidates (the curated store's df-cap discipline — once hot,
@@ -1772,9 +1756,8 @@ object Streams {
       .select(col("doc_id"), col("ob")).distinct()
     val cand = crossCand.unionByName(intraCand).distinct()
     // near rail, verify stage: EXACT containment on candidates only
-    val framesTemplate = b1frames
-    val storedFrames = part.read(framesDir, framesTemplate)
-    val otherFrames = storedFrames.unionByName(b1frames).barrier()
+    val otherFrames = part.read(framesDir, b1frames)
+      .unionByName(b1frames).barrier()
     val nfB = b1set.select(col("doc_id"), col("nf").as("__nb"))
     val nfO = otherFrames.groupBy(col("doc_id").as("ob"))
       .agg(count(lit(1)).as("__no"))
@@ -1792,20 +1775,11 @@ object Streams {
     val dropped = exactDropped.unionByName(nearDropped).distinct()
     val admitted = b1set.join(dropped, Seq("doc_id"), "left_anti")
       .barrier() // feeds docs, fps, bands AND frames writes
-    if (!fs.exists(new org.apache.hadoop.fs.Path(metaDir))) {
-      Seq((minContainment, frameBytes, maxBucket,
-        fpTemplate.schema.json, bandTemplate.schema.json,
-        framesTemplate.schema.json))
-        .toDF("min_containment", "frame_bytes", "max_bucket",
-          "fps_schema", "bands_schema", "frames_schema")
-        .coalesce(1).write.mode("overwrite").parquet(metaDir)
-    }
+    meta.stamp("fps" -> fpTemplate, "bands" -> batchBands,
+      "frames" -> b1frames)
     val admittedIds = admitted.select(col("doc_id"))
-    val docsOut = batch0
-      .select(col(idCol).cast("long").as("doc_id"),
-        col(payloadCol).as("payload"), col(sourceCol).as("source"))
-      .join(admittedIds, Seq("doc_id"), "left_semi")
-    part.write(docsOut, docsDir)
+    part.write(media.drop("n_chars").join(admittedIds, Seq("doc_id"),
+      "left_semi"), docsDir)
     part.write(admitted.select(col("fp")), fpsDir)
     part.write(batchBands.join(admittedIds, Seq("doc_id"), "left_semi"),
       bandsDir)
@@ -1813,10 +1787,6 @@ object Streams {
       framesDir)
     ()
   }
-
-  /** The admitted video corpus without the internal batch column. */
-  def videoDocs(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(s"$storeDir/docs").drop("batch")
 
   /** Streaming CAPTIONED-image corpus ingest — the paired-modality
     * admission store (the streaming form of the q274/q275 operators
@@ -1850,15 +1820,8 @@ object Streams {
       payloadCol: String, textCol: String, sourceCol: String,
       storeDir: String, checkpoint: String, maxHamming: Int = 4,
       minJac: Double = 0.2): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty)
-          captionedCommit(batch0, batchId, idCol, payloadCol, textCol,
-            sourceCol, storeDir, maxHamming, minJac)
-      }
-      .start()
+    eachBatch(stream, checkpoint)(captionedCommit(_, _, idCol,
+      payloadCol, textCol, sourceCol, storeDir, maxHamming, minJac))
 
   /** One admission cycle of [[toCaptionedImageCorpusStore]], factored
     * out for spec-driven batch sequences and replays: the
@@ -1893,15 +1856,9 @@ object Streams {
       payloadCol: String, textCol: String, sourceCol: String,
       storeDir: String, checkpoint: String, maxHamming: Int = 4,
       minJac: Double = 0.2, window: Int = 4): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty)
-          audioTranscriptCommit(batch0, batchId, idCol, payloadCol,
-            textCol, sourceCol, storeDir, maxHamming, minJac, window)
-      }
-      .start()
+    eachBatch(stream, checkpoint)(audioTranscriptCommit(_, _, idCol,
+      payloadCol, textCol, sourceCol, storeDir, maxHamming, minJac,
+      window))
 
   /** One admission cycle of [[toAudioTranscriptCorpusStore]]. */
   private[graft] def audioTranscriptCommit(batch0: DataFrame,
@@ -1937,15 +1894,8 @@ object Streams {
       payloadCol: String, textCol: String, sourceCol: String,
       storeDir: String, checkpoint: String,
       minJac: Double = 0.2, frameBytes: Int = 8): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty)
-          videoTranscriptCommit(batch0, batchId, idCol, payloadCol,
-            textCol, sourceCol, storeDir, minJac, frameBytes)
-      }
-      .start()
+    eachBatch(stream, checkpoint)(videoTranscriptCommit(_, _, idCol,
+      payloadCol, textCol, sourceCol, storeDir, minJac, frameBytes))
 
   /** One admission cycle of [[toVideoTranscriptCorpusStore]]. */
   private[graft] def videoTranscriptCommit(batch0: DataFrame,
@@ -1987,36 +1937,24 @@ object Streams {
     require(minJac > 0 && minJac <= 1.0,
       s"$caller: minJac=$minJac")
     val s = batch0.sparkSession
-    import s.implicits._
     val (docsDir, fpsDir, bandsDir, postingsDir) =
       (s"$storeDir/docs", s"$storeDir/fps", s"$storeDir/bands",
         s"$storeDir/postings")
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = storeFs(s, storeDir)
     requireNoPendingCompaction(fs, caller,
       Seq(fpsDir, bandsDir, postingsDir))
-    val metaDir = s"$storeDir/meta"
-    if (fs.exists(new org.apache.hadoop.fs.Path(metaDir))) {
-      val m = s.read.parquet(metaDir).first()
-      require(m.schema.fieldNames.contains("min_jac"),
-        s"$caller: $storeDir is not a paired admission store " +
-          "(meta pins no min_jac — committing a different modality " +
-          "into the store would silently corrupt its admission index)")
-      // pre-r13 captioned stores have no pair_kind column = image
-      val storedKind =
-        if (m.schema.fieldNames.contains("pair_kind"))
-          m.getAs[String]("pair_kind")
-        else "captioned-image"
-      require(storedKind == kind,
-        s"$caller: store $storeDir holds '$storedKind' pairs but " +
-          s"this commit signs '$kind' — one modality per store")
-      val (sh, sj) = (m.getAs[Int]("max_hamming"),
-        m.getAs[Double]("min_jac"))
-      require(sh == maxHamming && sj == minJac,
-        s"$caller: store $storeDir was created with " +
-          s"(maxHamming=$sh, minJac=$sj) but this commit uses " +
-          s"($maxHamming, $minJac) — both are part of the store's " +
-          "admission contract")
+    // pre-r13 captioned stores have no pair_kind column (image)
+    val meta = new StoreMeta(s, fs, storeDir, caller, "paired admission",
+      Seq(
+        Pin("max_hamming", "maxHamming", maxHamming, None,
+          "the Hamming threshold is part of the store's admission " +
+            "contract"),
+        Pin("min_jac", "minJac", minJac, None,
+          "the text threshold is part of the store's admission contract"),
+        Pin("pair_kind", "pair_kind", kind, Some("captioned-image"),
+          "one modality per store", modality = true),
+        SchemaOf("fps"), SchemaOf("bands"), SchemaOf("postings")))
+    meta.row.foreach { m =>
       // the pinned index schemas are part of the contract too: a
       // store written by an engine whose fps partitions carry
       // different column names (e.g. a pre-r13 captioned store's
@@ -2048,10 +1986,7 @@ object Streams {
         col(sourceCol).as("source"))
       .barrier() // decode + shingles + docs write share one scan
     // ONE decode; undecodable payloads rejected
-    val sigs = sign(
-        base.select(col("doc_id"), col("payload"), col("source"),
-          lit(0L).as("n_chars"))
-          .as[graft.llmops.Multimodal.MediaRecord])
+    val sigs = sign(mediaRecords(base, "doc_id", "payload", "source"))
       .join(base.select(col("doc_id"), md5(col("text")).as("cap_fp")),
         Seq("doc_id"))
       .select(col("doc_id"), col("fp"), col("cap_fp"), col("nhash"))
@@ -2076,34 +2011,17 @@ object Streams {
     // near rail, media candidates: shared 16-bit nhash band AND
     // Hamming ≤ maxHamming (the media store's kernel), batch vs
     // store and batch vs smaller-id batch peer
-    def bandsOf(df: DataFrame): DataFrame = df.select(
-      col("doc_id"), col("nhash"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("nhash"), b * 16).bitwiseAND(lit(0xffffL))): _*))
-        .as(Seq("band", "bucket")))
     val batchBands = bandsOf(b1).barrier()
-    val bandTemplate = batchBands
-    val storedBands = part.read(bandsDir, bandTemplate)
     def hammingCand(other: DataFrame, intra: Boolean): DataFrame =
-      batchBands
-        .select(col("doc_id"), col("nhash").as("__hb"), col("band"),
-          col("bucket"))
-        .join(other.select(col("doc_id").as("ob"),
-          col("nhash").as("__hs"), col("band"), col("bucket")),
-          Seq("band", "bucket"))
-        .filter((if (intra) col("ob") < col("doc_id") else lit(true))
-          && bit_count(col("__hb").bitwiseXOR(col("__hs")))
-            <= maxHamming)
+      hammingPairs(batchBands, other, maxHamming, intra)
         .select(col("doc_id"), col("ob")).distinct()
-    val cand = hammingCand(storedBands, intra = false)
+    val cand = hammingCand(part.read(bandsDir, batchBands), intra = false)
       .unionByName(hammingCand(batchBands, intra = true))
       .distinct()
     // near rail, caption verify: exact Jaccard on candidates only —
     // the shingle join is keyed (candidate doc, shingle), bounded by
     // |cand| × shingles/doc, never a corpus self-join
-    val postingsTemplate = b1Sh
-    val otherSh = part.read(postingsDir, postingsTemplate)
-      .unionByName(b1Sh)
+    val otherSh = part.read(postingsDir, b1Sh).unionByName(b1Sh)
     val nearDropped = cand
       .join(b1Sh.select(col("doc_id"), col("nsh").as("__nb"),
         col("sh")), Seq("doc_id"))
@@ -2117,13 +2035,8 @@ object Streams {
     val dropped = exactDropped.unionByName(nearDropped).distinct()
     val admitted = b1.join(dropped, Seq("doc_id"), "left_anti")
       .barrier() // feeds docs, fps, bands AND postings writes
-    if (!fs.exists(new org.apache.hadoop.fs.Path(metaDir))) {
-      Seq((maxHamming, minJac, kind, fpTemplate.schema.json,
-        bandTemplate.schema.json, postingsTemplate.schema.json))
-        .toDF("max_hamming", "min_jac", "pair_kind", "fps_schema",
-          "bands_schema", "postings_schema")
-        .coalesce(1).write.mode("overwrite").parquet(metaDir)
-    }
+    meta.stamp("fps" -> fpTemplate, "bands" -> batchBands,
+      "postings" -> b1Sh)
     val admittedIds = admitted.select(col("doc_id"))
     part.write(base.join(admittedIds, Seq("doc_id"), "left_semi"),
       docsDir)
@@ -2134,10 +2047,6 @@ object Streams {
       postingsDir)
     ()
   }
-
-  /** The admitted captioned-image corpus without the batch column. */
-  def captionedDocs(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(s"$storeDir/docs").drop("batch")
 
   /** Offline compaction for a media admission store
     * ([[toImageCorpusStore]] / [[toAudioCorpusStore]] /
@@ -2163,14 +2072,6 @@ object Streams {
         .filter(t => meta.schema.fieldNames.contains(s"${t}_schema"))
         .map(t => IndexTable(t, pinnedSchema(meta, s"${t}_schema")))
     }
-
-  /** The admitted image corpus without the internal batch column. */
-  def imageDocs(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(s"$storeDir/docs").drop("batch")
-
-  /** The admitted audio corpus without the internal batch column. */
-  def audioDocs(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(s"$storeDir/docs").drop("batch")
 
   /** Streaming document egress: each micro-batch pushes its rows as
     * JSON documents through a DocSink transport (STOMP frames,

@@ -156,6 +156,10 @@ class CurationSpec extends AnyFunSuite {
     assert(conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
     assert(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) ==
       64L * 1024 * 1024)
+    // AQE's sort-merge → shuffled-hash rewrite threshold is fixed at 64m
+    assert(conf.getConf(
+      SQLConf.ADAPTIVE_MAX_SHUFFLE_HASH_JOIN_LOCAL_MAP_THRESHOLD) ==
+      64L * 1024 * 1024)
   }
 
   // ---- dupNgramFraction ----

@@ -1023,7 +1023,7 @@ class StreamingSpec extends AnyFunSuite {
         maxHamming: Int = 4): Unit =
       Streams.imageCommit(rows.toDF("id", "payload", "src"), batchId,
         "id", "payload", "src", store, maxHamming)
-    def ids() = Streams.imageDocs(spark, store)
+    def ids() = Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq
     // batch 0: ids 2 (BMP) and 3 (PNG) are the SAME pixels through
     // different containers → min-id keeper 2; id 4 a new family;
@@ -1067,7 +1067,7 @@ class StreamingSpec extends AnyFunSuite {
         maxHamming: Int = 4): Unit =
       Streams.audioCommit(rows.toDF("id", "payload", "src"), batchId,
         "id", "payload", "src", store, maxHamming, window = 4)
-    def ids() = Streams.audioDocs(spark, store)
+    def ids() = Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq
     // batch 0: 2 and 3 are byte-identical clips → min-id keeper 2;
     // 4 a different clip; 99 undecodable → rejected
@@ -1110,7 +1110,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq(img(13L, 37L), img(11L, 5L), img(15L, 7L))
         .toDF("id", "payload", "src"),
       0L, "id", "payload", "src", store, 4)
-    val ids = Streams.imageDocs(spark, store)
+    val ids = Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(ids == Seq(11L, 15L)) // 13 dropped: near 11 within batch
     // replay of the same batch re-derives the identical admission
@@ -1118,7 +1118,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq(img(13L, 37L), img(11L, 5L), img(15L, 7L))
         .toDF("id", "payload", "src"),
       0L, "id", "payload", "src", store, 4)
-    assert(Streams.imageDocs(spark, store)
+    assert(Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq == ids)
   }
 
@@ -1170,7 +1170,7 @@ class StreamingSpec extends AnyFunSuite {
     val b2 = Seq(wav(11L, 5L, 0), wav(13L, 5L, 2), wav(15L, 9L, 0))
     commit(s"$dir/a", 2L, b2)
     commit(s"$dir/b", 2L, b2)
-    def ids(store: String) = Streams.audioDocs(spark, store)
+    def ids(store: String) = Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(ids(s"$dir/a") == ids(s"$dir/b"))
     assert(ids(s"$dir/a") == Seq(1L, 2L, 3L, 15L))
@@ -1221,7 +1221,7 @@ class StreamingSpec extends AnyFunSuite {
     val b2 = Seq(wav(11L, 5L, 0), wav(13L, 5L, 2), wav(15L, 9L, 0))
     commit(s"$dir/a", 2L, b2)
     commit(s"$dir/b", 2L, b2)
-    def ids(store: String) = Streams.audioDocs(spark, store)
+    def ids(store: String) = Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(ids(s"$dir/a") == ids(s"$dir/b"))
     assert(ids(s"$dir/a") == Seq(1L, 2L, 3L, 15L))
@@ -1243,7 +1243,7 @@ class StreamingSpec extends AnyFunSuite {
       Streams.videoCommit(rows.toDF("id", "payload", "src"), batchId,
         "id", "payload", "src", store, minContainment,
         frameBytes = 16, maxBucket = 256)
-    def ids(store: String) = Streams.videoDocs(spark, store)
+    def ids(store: String) = Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq
     // batch 0: id 3 holds the SAME frames as id 2 re-ordered with a
     // repeat (identical SET → exact rail, min-id keeper 2); id 4 a
@@ -1305,7 +1305,7 @@ class StreamingSpec extends AnyFunSuite {
       (5L, payload(600 to 607), "s"))
     q.processAllAvailable()
     q.stop()
-    assert(Streams.videoDocs(spark, store)
+    assert(Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq ==
       Seq(1L, 3L, 5L))
   }
@@ -1335,7 +1335,7 @@ class StreamingSpec extends AnyFunSuite {
       Streams.captionedCommit(
         rows.toDF("id", "payload", "caption", "src"), batchId,
         "id", "payload", "caption", "src", store, 4, minJac)
-    def ids() = Streams.captionedDocs(spark, store)
+    def ids() = Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq
     // batch 0: 3 re-encodes 2's pixels under the IDENTICAL caption
     // (paired-exact → keeper 2); 4 = same image, unrelated caption →
@@ -1406,7 +1406,7 @@ class StreamingSpec extends AnyFunSuite {
         rows.toDF("id", "payload", "transcript", "src"), batchId,
         "id", "payload", "transcript", "src", store, 4, minJac,
         window = 4)
-    def ids() = Streams.captionedDocs(spark, store)
+    def ids() = Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq
     // batch 0: 3 re-delivers 2's clip under the IDENTICAL transcript
     // (paired-exact → keeper 2); 4 = same clip, unrelated transcript
@@ -1482,7 +1482,7 @@ class StreamingSpec extends AnyFunSuite {
       s"$dir/store", s"$dir/chk")
     src.addData(rows: _*)
     q.processAllAvailable(); q.stop()
-    assert(Streams.captionedDocs(spark, s"$dir/store")
+    assert(Streams.curatedDocs(spark, s"$dir/store")
       .select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
   }
 
@@ -1510,7 +1510,7 @@ class StreamingSpec extends AnyFunSuite {
         rows.toDF("id", "payload", "transcript", "src"), batchId,
         "id", "payload", "transcript", "src", store, minJac,
         frameBytes = 8)
-    def ids() = Streams.captionedDocs(spark, store)
+    def ids() = Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq
     // batch 0: 3 re-delivers 2's clip RE-ORDERED (same frame set →
     // same set_fp) under the identical transcript → paired-exact
@@ -1579,7 +1579,7 @@ class StreamingSpec extends AnyFunSuite {
       s"$dir/store", s"$dir/chk")
     src.addData(rows: _*)
     q.processAllAvailable(); q.stop()
-    assert(Streams.captionedDocs(spark, s"$dir/store")
+    assert(Streams.curatedDocs(spark, s"$dir/store")
       .select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
   }
 
@@ -1713,7 +1713,7 @@ class StreamingSpec extends AnyFunSuite {
       (7L, img(42L, false), capA, "s"))            // exact dup of 1
     q.processAllAvailable()
     q.stop()
-    assert(Streams.captionedDocs(spark, store)
+    assert(Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq ==
       Seq(1L, 3L))
   }
@@ -1732,7 +1732,7 @@ class StreamingSpec extends AnyFunSuite {
         rows: Seq[(Long, Array[Byte], String)]): Unit =
       Streams.audioCommit(rows.toDF("id", "payload", "src"), batchId,
         "id", "payload", "src", store, 4, window = 4)
-    def ids(store: String) = Streams.audioDocs(spark, store)
+    def ids(store: String) = Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq
     for (store <- Seq(s"$dir/a", s"$dir/b")) {
       commit(store, 0L, Seq(wav(1L, 5L, 0), wav(2L, 6L, 0)))
@@ -1779,7 +1779,7 @@ class StreamingSpec extends AnyFunSuite {
       Streams.audioCommit(rows, b, "id", "payload", "src", store, 4,
         window = 4)
     }
-    def ids() = Streams.audioDocs(spark, store)
+    def ids() = Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(ids() == Seq(1L, 2L))
     assert(Streams.compactMediaStore(spark, store, uptoBatch = 1L) ==
@@ -1810,7 +1810,7 @@ class StreamingSpec extends AnyFunSuite {
                                       // (+2 gain: near rail, Hamming 1)
     q.processAllAvailable()
     q.stop()
-    assert(Streams.audioDocs(spark, store)
+    assert(Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq ==
       Seq(1L, 3L, 7L))
   }
@@ -1836,9 +1836,221 @@ class StreamingSpec extends AnyFunSuite {
     input.addData(png(5L, 10L), png(7L, 12L)) // 5 re-encodes family 10
     q.processAllAvailable()
     q.stop()
-    assert(Streams.imageDocs(spark, store)
+    assert(Streams.curatedDocs(spark, store)
       .select("doc_id").as[Long].collect().sorted.toSeq ==
       Seq(1L, 3L, 7L))
+  }
+
+  test("media stores pin their modality: an audio commit into an image " +
+    "store, or an image commit into an audio store, refuses (one " +
+    "modality per store); a store stamped before the pin still accepts") {
+    import spark.implicits._
+    import graft.llmops.Multimodal
+    val dir = Files.createTempDirectory("graft-mediakind").toString
+    def img(id: Long, pid: Long): (Long, Array[Byte], String) =
+      (id, Multimodal.encodeBmp(Array.tabulate(32, 36)((y, x) =>
+        Multimodal.synthPixel(pid, x, y)), 36, 32), "s")
+    def wav(id: Long, pid: Long): (Long, Array[Byte], String) =
+      (id, Multimodal.encodeWav(Array.tabulate(256)(t =>
+        Multimodal.synthSample(pid, t))), "s")
+    def image(store: String, b: Long, r: (Long, Array[Byte], String)) =
+      Streams.imageCommit(Seq(r).toDF("id", "payload", "src"), b, "id",
+        "payload", "src", store, 4)
+    def audio(store: String, b: Long, r: (Long, Array[Byte], String)) =
+      Streams.audioCommit(Seq(r).toDF("id", "payload", "src"), b, "id",
+        "payload", "src", store, 4, 4)
+    def ids(store: String) = Streams.curatedDocs(spark, store)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    val (imgStore, audStore) = (s"$dir/img", s"$dir/aud")
+    image(imgStore, 0L, img(1L, 5L))
+    audio(audStore, 0L, wav(1L, 5L))
+    val intoImage = intercept[IllegalArgumentException] {
+      audio(imgStore, 1L, wav(2L, 6L))
+    }
+    assert(intoImage.getMessage.contains("one modality per store"))
+    val intoAudio = intercept[IllegalArgumentException] {
+      image(audStore, 1L, img(2L, 6L))
+    }
+    assert(intoAudio.getMessage.contains("one modality per store"))
+    assert(ids(imgStore) == Seq(1L) && ids(audStore) == Seq(1L))
+    assert(Streams.storeKind(spark, imgStore) == "media:image")
+    assert(Streams.storeKind(spark, audStore) == "media:audio")
+    // a store stamped before media_kind existed: no column, kind
+    // "media", and commits are accepted as before
+    val meta = spark.read.parquet(s"$imgStore/meta")
+    meta.drop("media_kind").localCheckpoint()
+      .coalesce(1).write.mode("overwrite").parquet(s"$imgStore/meta")
+    assert(Streams.storeKind(spark, imgStore) == "media")
+    image(imgStore, 1L, img(3L, 7L))
+    assert(ids(imgStore) == Seq(1L, 3L))
+    assert(!spark.read.parquet(s"$imgStore/meta").columns
+      .contains("media_kind"))
+  }
+
+  test("rename-aside swap crash window: with the current state gone and " +
+    "__prev holding it, the next merge builds on __prev, skips a " +
+    "replayed id from its ledger, and leaves no __prev or __tmp") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-swapcrash").toString
+    def path(p: String) = java.nio.file.Paths.get(p)
+    // the state a crash between the swap's two renames leaves: the
+    // current store moved to __prev, the crashed attempt's new state
+    // still in __tmp
+    def crash(store: String)(writeTmp: String => Unit): Unit = {
+      Files.move(path(store), path(s"${store}__prev"))
+      writeTmp(s"${store}__tmp")
+    }
+    def healed(store: String): Unit =
+      for (aside <- Seq("__prev", "__tmp"))
+        assert(!Files.exists(path(store + aside)), store + aside)
+    // sketch store (Bloom bits)
+    val bloom = s"$dir/bloom"
+    val (m, h) = (512, 3)
+    val input = MemoryStream[String]
+    val q = Streams.toBloomStore(input.toDF().toDF("k"), "k", m, h,
+      bloom, s"$dir/bloom_ckpt")
+    val b1 = (1 to 40).map(i => s"eval$i")
+    val b2 = (41 to 80).map(i => s"eval$i")
+    input.addData(b1: _*); q.processAllAvailable()
+    crash(bloom)(graft.llmops.Sketches.bloomBuild(Seq("junk").toDF("k"),
+      "k", m, h).write.parquet(_))
+    input.addData(b2: _*); q.processAllAvailable()
+    q.stop()
+    def bits(df: org.apache.spark.sql.DataFrame) =
+      df.select("pos").as[Long].collect().sorted.toSeq
+    assert(bits(spark.read.parquet(bloom)) == bits(graft.llmops.Sketches
+      .bloomBuild((b1 ++ b2).toDF("k"), "k", m, h)))
+    healed(bloom)
+    // ledgered store (CMS): a replayed id is skipped by __prev's ledger
+    val cms = s"$dir/cms"
+    def sketchOf(terms: Seq[String]) = graft.llmops.Sketches
+      .countMinBuild(terms.toDF("term"), "term", d = 4, w = 64)
+    def counts(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val (t0, t1, t2) = (Seq("a", "a", "b"), Seq("b", "c"), Seq("d"))
+    Streams.mergeCmsBatch(spark, cms, sketchOf(t0), 0L)
+    Streams.mergeCmsBatch(spark, cms, sketchOf(t1), 1L)
+    crash(cms) { tmp =>
+      sketchOf(Seq("junk")).write.parquet(s"$tmp/sketch")
+      Seq(99L).toDF("batch_id").write.parquet(s"$tmp/batches")
+    }
+    Streams.mergeCmsBatch(spark, cms, sketchOf(t1), 1L) // replay: no-op
+    Streams.mergeCmsBatch(spark, cms, sketchOf(t2), 2L)
+    assert(counts(spark.read.parquet(s"$cms/sketch")) ==
+      counts(sketchOf(t0 ++ t1 ++ t2)))
+    assert(spark.read.parquet(s"$cms/batches").as[Long].collect()
+      .toSeq == Seq(2L))
+    healed(cms)
+    // SCD store: the next batch diffs against __prev, so keys it does
+    // not touch are neither lost nor re-emitted as added
+    val (cur, hist) = (s"$dir/cur", s"$dir/hist")
+    val scdIn = MemoryStream[(Long, Double, Long)]
+    val scd = Streams.toScdStore(scdIn.toDF().toDF("k", "v", "ts"),
+      Seq("k"), Seq("v"), "ts", cur, hist, s"$dir/scd_ckpt")
+    scdIn.addData((1L, 10.0, 1L), (1L, 11.0, 2L), (2L, 20.0, 1L))
+    scd.processAllAvailable()
+    crash(cur)(Seq((9L, 9.0)).toDF("k", "v").write.parquet(_))
+    scdIn.addData((1L, 12.0, 3L), (3L, 30.0, 1L))
+    scd.processAllAvailable()
+    scd.stop()
+    assert(spark.read.parquet(cur).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
+      Map(1L -> 12.0, 2L -> 20.0, 3L -> 30.0))
+    assert(spark.read.parquet(hist).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(4))).sorted
+      .toSeq == Seq((1L, "added", 0L), (1L, "changed", 1L),
+        (2L, "added", 0L), (3L, "added", 1L)))
+    healed(cur)
+  }
+
+  test("meta format: every admission store kind stamps its contract " +
+    "under fixed column names and types, with index schemas pinned") {
+    import spark.implicits._
+    import graft.llmops.{LanguageModel, Multimodal}
+    val dir = Files.createTempDirectory("graft-metaformat").toString
+    def format(store: String): Seq[String] =
+      spark.read.parquet(s"$store/meta").schema.fields
+        .map(f => s"${f.name} ${f.dataType.simpleString}").toSeq
+    def pinned(store: String, table: String): Seq[String] =
+      org.apache.spark.sql.types.DataType.fromJson(
+        spark.read.parquet(s"$store/meta").first()
+          .getAs[String](s"${table}_schema"))
+        .asInstanceOf[StructType].fieldNames.toSeq
+    def check(store: String, kind: String, columns: Seq[String],
+        schemas: (String, Seq[String])*): Unit = {
+      assert(format(store) == columns, store)
+      for ((table, fields) <- schemas)
+        assert(pinned(store, table) == fields, s"$store $table")
+      assert(Streams.storeKind(spark, store) == kind, store)
+    }
+    // curated ±url ±clf
+    val curated = Seq("max_df int", "fps_schema string",
+      "postings_schema string", "dfs_schema string", "url_rail boolean",
+      "clf_gate boolean", "clf_fp bigint", "clf_min_margin double",
+      "clf_buckets int")
+    val ref = Seq((100L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    val model = LanguageModel.bigramModel(ref, "doc_id", "text")
+    val v = LanguageModel.refVocabSize(ref, "text")
+    val gate = Streams.TrainedGate(Seq((1L, 0.5)).toDF("bucket", "w"),
+      64, -10.0)
+    for ((name, url, clf, kind) <- Seq(("plain", None, None, "curated"),
+        ("url", Some("url"), None, "curated+url"),
+        ("clf", None, Some(gate), "curated+clf"))) {
+      Streams.curatedCommitIndexed(
+        Seq((1L, "alpha beta gamma delta", "http://a.example/x"))
+          .toDF("id", "body", "url"),
+        0L, "id", "body", model, v, 0.0, s"$dir/$name", 0.5, 1000, url,
+        clf)
+      check(s"$dir/$name", kind, curated, "fps" -> Seq("fp"),
+        "postings" -> Seq("doc", "nsh", "sh"), "dfs" -> Seq("sh", "df"))
+    }
+    // image, audio, video
+    val media = Seq("max_hamming int", "fps_schema string",
+      "bands_schema string", "media_kind string")
+    val nearBands = Seq("doc_id", "nhash", "band", "bucket")
+    val bmp = Multimodal.encodeBmp(Array.tabulate(32, 36)((y, x) =>
+      Multimodal.synthPixel(5L, x, y)), 36, 32)
+    val wav = Multimodal.encodeWav(Array.tabulate(256)(t =>
+      Multimodal.synthSample(5L, t)))
+    def frames(pid: Long): Array[Byte] =
+      (0 until 8).flatMap(f => Array.tabulate(8)(b =>
+        ((pid * 31 + f * 7 + b * 3) % 251).toByte)).toArray
+    def rows(payload: Array[Byte]) =
+      Seq((1L, payload, "s")).toDF("id", "payload", "src")
+    Streams.imageCommit(rows(bmp), 0L, "id", "payload", "src",
+      s"$dir/image", 4)
+    check(s"$dir/image", "media:image", media, "fps" -> Seq("fp"),
+      "bands" -> nearBands)
+    Streams.audioCommit(rows(wav), 0L, "id", "payload", "src",
+      s"$dir/audio", 4, 4)
+    check(s"$dir/audio", "media:audio", media, "fps" -> Seq("fp"),
+      "bands" -> nearBands)
+    Streams.videoCommit(rows(frames(5L)), 0L, "id", "payload", "src",
+      s"$dir/video", 0.75, 8, 256)
+    check(s"$dir/video", "media:video", Seq("min_containment double",
+      "frame_bytes int", "max_bucket int", "fps_schema string",
+      "bands_schema string", "frames_schema string"),
+      "fps" -> Seq("fp"), "bands" -> Seq("doc_id", "band", "bucket"),
+      "frames" -> Seq("doc_id", "frame_fp"))
+    // the three paired kinds
+    val paired = Seq("max_hamming int", "min_jac double",
+      "pair_kind string", "fps_schema string", "bands_schema string",
+      "postings_schema string")
+    def pairs(payload: Array[Byte]) =
+      Seq((1L, payload, "a caption with words", "s"))
+        .toDF("id", "payload", "text", "src")
+    Streams.captionedCommit(pairs(bmp), 0L, "id", "payload", "text",
+      "src", s"$dir/captioned", 4, 0.2)
+    Streams.audioTranscriptCommit(pairs(wav), 0L, "id", "payload",
+      "text", "src", s"$dir/audiotx", 4, 0.2, 4)
+    Streams.videoTranscriptCommit(pairs(frames(5L)), 0L, "id",
+      "payload", "text", "src", s"$dir/videotx", 0.2, 8)
+    for ((name, kind) <- Seq("captioned" -> "captioned-image",
+        "audiotx" -> "audio-transcript", "videotx" -> "video-transcript"))
+      check(s"$dir/$name", s"paired:$kind", paired,
+        "fps" -> Seq("fp", "cap_fp"), "bands" -> nearBands,
+        "postings" -> Seq("doc_id", "nsh", "sh"))
   }
 
   test("file source streams incrementally and lands in a day store") {
