@@ -1,40 +1,47 @@
 package graft.core
 
-import java.io.ByteArrayInputStream
+import java.math.{BigDecimal => JBigDecimal, BigInteger}
 import java.nio.ByteBuffer
-import java.time.{Instant, LocalDate}
-import java.time.temporal.ChronoUnit
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.{LogicalTypes, Schema => ASchema, SchemaBuilder}
-import org.apache.avro.file.{DataFileStream, DataFileWriter}
+import org.apache.avro.{LogicalTypes, Schema => ASchema}
+import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericFixed, GenericRecord}
+import org.apache.avro.mapred.FsInput
 import org.apache.avro.util.Utf8
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
+import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriter, OutputWriterFactory, PartitionedFile}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Connector-free Avro source/sink on the `org.apache.avro` core API
+/** Connector-free Avro file format on the `org.apache.avro` core API
   * (which ships in every Spark distribution's jars, unlike the
   * `spark-avro` connector the reference adds via `--packages`,
-  * run_spark wrapper / spark_utils.py:434-478).
+  * run_spark wrapper / spark_utils.py:434-478). [[IO.avro]] and
+  * [[IO.writeAvro]] name it by class, so it needs no service
+  * registration.
   *
-  * Role and scale posture:
-  *   - The CONNECTOR path ([[IO.avro]]) is canonical on clusters:
-  *     splittable reads (container files split at sync markers),
-  *     vectorized decode, schema pushdown. Always prefer it when the
-  *     jar is present.
-  *   - This fallback exists so the avro surface WORKS (and is testable)
-  *     when the connector is absent. Reads are SPLIT at avro container
-  *     sync markers (the format's whole design point): the driver
-  *     carves byte ranges, each task `DataFileReader.sync`s to the
-  *     first block boundary after its range start and reads while not
-  *     `pastSync(end)` — the standard Hadoop input-split contract, so
-  *     a single-huge-file layout parallelizes like the connector's.
-  *     Decode is streaming; memory per task is one record, not one
-  *     split.
+  * It is one Spark `FileFormat`, so Spark's own file scan lists the
+  * files, carves the splits, reports input metrics, prunes columns and
+  * gives every row its source file (`input_file_name()`,
+  * `_metadata.file_path`). A split is a byte range of one container
+  * file; the reader `sync`s to the first block boundary after the range
+  * start and reads whole blocks while the last-passed sync is still
+  * inside the range (`pastSync`) — the standard Hadoop input-split
+  * contract, so a block belongs to exactly the split whose range holds
+  * the sync marker before it, and contiguous splits partition the
+  * record stream. Decode is streaming; memory per task is one record.
+  * Writes go through Spark's `FileFormatWriter`: one container file per
+  * task, task-attempt staging and `_SUCCESS` from the commit protocol.
   *
   * Type mapping (both directions): null/boolean/int/long/float/double/
   * string/enum→string/bytes/fixed→binary, logical date,
@@ -42,115 +49,119 @@ import org.apache.spark.sql.types._
   * keys), record→struct, union[null,T]→nullable T. Multi-branch unions
   * are rejected with a clear error rather than silently coerced.
   */
+class AvroIO extends FileFormat with Serializable {
+
+  /** The writer schema of the first non-empty file (a header peek);
+    * zero-length placeholders left by interrupted writers carry no
+    * header. */
+  override def inferSchema(spark: SparkSession,
+      options: Map[String, String],
+      files: Seq[FileStatus]): Option[StructType] =
+    files.find(_.getLen > 0).map(f => AvroIO.toSparkType(
+      AvroIO.headerSchema(spark, f.getPath)).asInstanceOf[StructType])
+
+  override def isSplitable(spark: SparkSession,
+      options: Map[String, String], path: Path): Boolean = true
+
+  /** Each file's own writer schema, projected to `requiredSchema`, is
+    * the reader schema of its splits: avro skips the pruned fields. */
+  override def buildReader(spark: SparkSession, dataSchema: StructType,
+      partitionSchema: StructType, requiredSchema: StructType,
+      filters: Seq[Filter], options: Map[String, String],
+      hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] = {
+    // SerializableConfiguration is private[spark]: ship the conf as its
+    // entry list and rebuild it per file
+    val confEntries = hadoopConf.asScala.map(e => e.getKey -> e.getValue)
+      .toArray
+    (file: PartitionedFile) =>
+      if (file.fileSize == 0L) Iterator.empty
+      else {
+        val conf = new Configuration(false)
+        confEntries.foreach { case (k, v) => conf.set(k, v) }
+        val datum = new GenericDatumReader[GenericRecord]()
+        val reader = new DataFileReader[GenericRecord](
+          new FsInput(file.toPath, conf), datum)
+        Option(TaskContext.get())
+          .foreach(_.addTaskCompletionListener[Unit](_ => reader.close()))
+        val projected = AvroIO.project(reader.getSchema, requiredSchema)
+        datum.setExpected(projected)
+        val end = file.start + file.length
+        reader.sync(file.start)
+        // closed on exhaust too: a task may read many packed files
+        new Iterator[InternalRow] {
+          private var open = true
+          def hasNext: Boolean = open && {
+            open = reader.hasNext && !reader.pastSync(end)
+            if (!open) reader.close()
+            open
+          }
+          def next(): InternalRow = AvroIO.toRow(reader.next(), projected)
+        }
+      }
+  }
+
+  /** One container file per task; `compression` (default snappy, or
+    * `none`) is the block codec. */
+  override def prepareWrite(spark: SparkSession, job: Job,
+      options: Map[String, String],
+      dataSchema: StructType): OutputWriterFactory = {
+    val schemaJson =
+      AvroIO.toAvroSchema(dataSchema, "topLevelRecord").toString
+    val compression = options.getOrElse("compression", "snappy")
+    new OutputWriterFactory {
+      def getFileExtension(context: TaskAttemptContext): String = ".avro"
+      def newInstance(file: String, dataSchema: StructType,
+          context: TaskAttemptContext): OutputWriter = new OutputWriter {
+        private val as = new ASchema.Parser().parse(schemaJson)
+        private val writer = {
+          val w = new DataFileWriter[GenericRecord](
+            new GenericDatumWriter[GenericRecord](as))
+          if (compression != "none")
+            w.setCodec(CodecFactory.fromString(compression))
+          val p = new Path(file)
+          w.create(as, p.getFileSystem(context.getConfiguration).create(p))
+        }
+        def write(row: InternalRow): Unit =
+          writer.append(AvroIO.toAvroRecord(row, as, dataSchema))
+        def close(): Unit = writer.close()
+        def path(): String = file
+      }
+    }
+  }
+
+  override def toString: String = "Avro"
+  override def equals(other: Any): Boolean = other.isInstanceOf[AvroIO]
+  override def hashCode(): Int = getClass.hashCode()
+}
+
 object AvroIO {
 
   // ---------------------------------------------------------------- read
 
-  /** Read avro container files into a DataFrame, SPLIT at container
-    * sync markers. The writer schema of the FIRST file (driver-side
-    * header peek) defines the frame schema; files with a
-    * different-but-compatible writer schema are resolved per-record by
-    * avro's own reader-schema resolution.
-    *
-    * Split protocol (the one avro's own Hadoop input format uses):
-    * the driver carves each file into ~total/minPartitions byte
-    * ranges; a task `sync(start)`s to the first block boundary AFTER
-    * its range start and reads whole blocks while the last-passed
-    * sync is still ≤ `end` (`pastSync`). A block belongs to exactly
-    * the split whose range contains the sync marker that precedes it,
-    * so contiguous splits partition the record stream — no record is
-    * read twice or dropped. */
-  def read(spark: SparkSession, paths: Seq[String],
-      minPartitions: Int = 0): DataFrame = {
-    require(paths.nonEmpty, "AvroIO.read of zero paths")
-    val files = listAvroFiles(spark, paths)
-    if (files.isEmpty)
-      throw new java.io.FileNotFoundException(
-        s"AvroIO.read: no avro files under ${paths.mkString(",")}")
-    // header peek must skip zero-length placeholders (interrupted
-    // writers) — the split carving below already tolerates them, and
-    // listing order is filesystem-dependent, so files.head alone
-    // would fail nondeterministically on such a directory
-    val headerFile = files.find(_._2 > 0).map(_._1).getOrElse(
-      throw new java.io.IOException(
-        s"AvroIO.read: only zero-length avro files under " +
-          paths.mkString(",")))
-    val readerSchema = headerSchema(spark, headerFile)
-    val sparkSchema = toSparkType(readerSchema).asInstanceOf[StructType]
-    val schemaJson = readerSchema.toString
-    val minP =
-      if (minPartitions > 0) minPartitions
-      else spark.sparkContext.defaultParallelism
-    val totalBytes = files.map(_._2).sum
-    val splitBytes = math.max(1L, (totalBytes + minP - 1) / minP)
-    // zero-length placeholders carry no container header — skip them
-    val splits: Seq[(String, Long, Long)] = files.filter(_._2 > 0L)
-      .flatMap { case (p, len) =>
-        (0L until len by splitBytes).map(s =>
-          (p.toString, s, math.min(s + splitBytes, len)))
-      }
-    // ship the hadoop conf as its entry list (same pattern as write:
-    // SerializableConfiguration is private[spark])
-    val confEntries: Array[(String, String)] =
-      spark.sparkContext.hadoopConfiguration.asScala
-        .map(e => e.getKey -> e.getValue).toArray
-    val rows = spark.sparkContext
-      .parallelize(splits, math.max(1, splits.size))
-      .flatMap { case (pathStr, start, end) =>
-        val rs = new ASchema.Parser().parse(schemaJson)
-        val hconf = new org.apache.hadoop.conf.Configuration(false)
-        confEntries.foreach { case (k, v) => hconf.set(k, v) }
-        val path = new Path(pathStr)
-        val in = new org.apache.avro.mapred.FsInput(path, hconf)
-        val reader = new org.apache.avro.file.DataFileReader[GenericRecord](
-          in, new GenericDatumReader[GenericRecord](null, rs))
-        reader.sync(start)
-        // lazily consumed by the flatMap; close on exhaust
-        new Iterator[Row] {
-          def hasNext: Boolean = {
-            val h = reader.hasNext && !reader.pastSync(end)
-            if (!h) { reader.close() }
-            h
-          }
-          def next(): Row =
-            toRow(reader.next(), rs)
-        }
-      }
-    spark.createDataFrame(rows, sparkSchema)
-  }
-
-  /** Expand paths/globs/directories to data files with their sizes. */
-  private def listAvroFiles(spark: SparkSession,
-      paths: Seq[String]): Seq[(Path, Long)] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    paths.flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(hconf)
-      val st = fs.globStatus(path)
-      val expanded =
-        if (st == null) Seq.empty
-        else st.toSeq.flatMap(s =>
-          if (s.isDirectory)
-            fs.listStatus(s.getPath).toSeq.filter(_.isFile)
-          else Seq(s))
-      expanded
-        .filter(s => s.getPath.getName.endsWith(".avro")
-          || !s.getPath.getName.startsWith("_"))
-        .map(s => s.getPath -> s.getLen)
-    }
-  }
-
-  /** Driver-side header peek: first file's writer schema, via the same
+  /** Driver-side header peek: a file's writer schema, via the same
     * Hadoop FileSystem the executors will read through. */
-  private def headerSchema(spark: SparkSession, first: Path): ASchema = {
+  private def headerSchema(spark: SparkSession, file: Path): ASchema = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = first.getFileSystem(hconf)
-    val in = fs.open(first)
+    val in = file.getFileSystem(hconf).open(file)
     try {
       val stream = new DataFileStream[GenericRecord](in,
         new GenericDatumReader[GenericRecord]())
       try stream.getSchema finally stream.close()
     } finally in.close()
+  }
+
+  /** The writer record schema cut down to `required`'s fields, in its
+    * order; a field this file lacks reads as null. */
+  private def project(writer: ASchema, required: StructType): ASchema = {
+    val fields = required.fields.toSeq.map { f =>
+      Option(writer.getField(f.name))
+        .map(w => new ASchema.Field(w, w.schema))
+        .getOrElse(new ASchema.Field(f.name, nullableWrap(
+          toAvroSchema(f.dataType, writer.getName + "_" + f.name), true),
+          null, ASchema.Field.NULL_DEFAULT_VALUE))
+    }
+    ASchema.createRecord(writer.getName, writer.getDoc,
+      writer.getNamespace, writer.isError, fields.asJava)
   }
 
   // ------------------------------------------------- avro -> spark types
@@ -204,106 +215,50 @@ object AvroIO {
 
   // ------------------------------------------------ avro -> spark values
 
-  private def toRow(rec: GenericRecord, s: ASchema): Row = {
-    val resolved =
-      if (s.getType == ASchema.Type.UNION) nonNullBranch(s) else s
-    Row.fromSeq(resolved.getFields.asScala.toSeq.map(f =>
-      fromAvro(rec.get(f.pos), f.schema)))
-  }
+  private def toRow(rec: GenericRecord, record: ASchema): InternalRow =
+    new GenericInternalRow(record.getFields.asScala.iterator.map(f =>
+      fromAvro(rec.get(f.pos), f.schema)).toArray[Any])
 
+  /** An avro datum as the Catalyst value of its [[toSparkType]]. */
   private def fromAvro(v: Any, s: ASchema): Any = {
     if (v == null) return null
     val rs = if (s.getType == ASchema.Type.UNION) nonNullBranch(s) else s
+    def decimal(unscaled: Array[Byte], d: LogicalTypes.Decimal) =
+      Decimal(new JBigDecimal(new BigInteger(unscaled), d.getScale),
+        d.getPrecision, d.getScale)
     rs.getType match {
-      case ASchema.Type.STRING | ASchema.Type.ENUM => v.toString
-      case ASchema.Type.INT =>
-        if (rs.getLogicalType.isInstanceOf[LogicalTypes.Date])
-          LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong)
-        else v
+      case ASchema.Type.STRING | ASchema.Type.ENUM => v match {
+        case u: Utf8 => UTF8String.fromBytes(u.getBytes, 0, u.getByteLength)
+        case other   => UTF8String.fromString(other.toString)
+      }
       case ASchema.Type.LONG => rs.getLogicalType match {
-        case _: LogicalTypes.TimestampMillis =>
-          Instant.ofEpochMilli(v.asInstanceOf[Long])
-        case _: LogicalTypes.TimestampMicros =>
-          Instant.EPOCH.plus(v.asInstanceOf[Long], ChronoUnit.MICROS)
-        case _ => v
+        case _: LogicalTypes.TimestampMillis => v.asInstanceOf[Long] * 1000L
+        case _ => v // timestamp-micros is Catalyst's own unit
       }
-      case ASchema.Type.BYTES => rs.getLogicalType match {
-        case d: LogicalTypes.Decimal =>
-          val bb = v.asInstanceOf[ByteBuffer].duplicate()
-          val bytes = new Array[Byte](bb.remaining()); bb.get(bytes)
-          BigDecimal(new java.math.BigInteger(bytes)) / BigDecimal(10).pow(d.getScale)
-        case _ =>
-          val bb = v.asInstanceOf[ByteBuffer].duplicate()
-          val bytes = new Array[Byte](bb.remaining()); bb.get(bytes)
-          bytes
-      }
+      case ASchema.Type.BYTES =>
+        val bb = v.asInstanceOf[ByteBuffer].duplicate()
+        val bytes = new Array[Byte](bb.remaining()); bb.get(bytes)
+        rs.getLogicalType match {
+          case d: LogicalTypes.Decimal => decimal(bytes, d)
+          case _ => bytes
+        }
       case ASchema.Type.FIXED => rs.getLogicalType match {
         case d: LogicalTypes.Decimal =>
-          BigDecimal(new java.math.BigInteger(
-            v.asInstanceOf[GenericFixed].bytes())) / BigDecimal(10).pow(d.getScale)
+          decimal(v.asInstanceOf[GenericFixed].bytes(), d)
         case _ => v.asInstanceOf[GenericFixed].bytes().clone()
       }
       case ASchema.Type.ARRAY =>
-        v.asInstanceOf[java.util.Collection[Any]].asScala.toSeq
-          .map(fromAvro(_, rs.getElementType))
+        new GenericArrayData(v.asInstanceOf[java.util.Collection[Any]]
+          .asScala.iterator.map(fromAvro(_, rs.getElementType)).toArray[Any])
       case ASchema.Type.MAP =>
-        v.asInstanceOf[java.util.Map[Any, Any]].asScala.map {
-          case (k, mv) => k.toString -> fromAvro(mv, rs.getValueType)
-        }.toMap
+        val kv = v.asInstanceOf[java.util.Map[Any, Any]].asScala.toArray
+        new ArrayBasedMapData(
+          new GenericArrayData(kv.map(e =>
+            UTF8String.fromString(e._1.toString))),
+          new GenericArrayData(kv.map(e => fromAvro(e._2, rs.getValueType))))
       case ASchema.Type.RECORD => toRow(v.asInstanceOf[GenericRecord], rs)
-      case _ => v match { // boolean/float/double and Utf8 leftovers
-        case u: Utf8 => u.toString
-        case other   => other
-      }
+      case _ => v // boolean/int (and date days)/float/double
     }
-  }
-
-  // --------------------------------------------------------------- write
-
-  /** Distributed avro container-file write: one `part-NNNNN.avro` per
-    * partition, written executor-side through the Hadoop FileSystem
-    * API, `_SUCCESS` stamped by the driver after the action completes.
-    *
-    * Commit posture (honest): files are named by PARTITION id and
-    * created with overwrite=true, so a task RETRY rewrites its own file
-    * rather than duplicating — but unlike the connector this is not a
-    * full output-commit protocol (no task-attempt staging), so disable
-    * speculative execution when using the fallback sink. The connector
-    * sink remains canonical on clusters. */
-  def write(df: DataFrame, out: String,
-      compression: String = "snappy"): Unit = {
-    val spark = df.sparkSession
-    val avroSchemaJson = toAvroSchema(df.schema, "topLevelRecord").toString
-    // SerializableConfiguration is private[spark]; ship the conf as its
-    // entry list and rebuild per task (tiny: site overrides only).
-    val confEntries: Array[(String, String)] =
-      spark.sparkContext.hadoopConfiguration.asScala
-        .map(e => e.getKey -> e.getValue).toArray
-    val outPath = new Path(out)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(outPath)) fs.delete(outPath, true)
-    fs.mkdirs(outPath)
-    val sparkSchema = df.schema
-    df.rdd.foreachPartition { rows =>
-      val as = new ASchema.Parser().parse(avroSchemaJson)
-      val pid = TaskContext.getPartitionId()
-      val p = new Path(out, f"part-$pid%05d.avro")
-      val hconf = new org.apache.hadoop.conf.Configuration(false)
-      confEntries.foreach { case (k, v) => hconf.set(k, v) }
-      val pfs = p.getFileSystem(hconf)
-      val os = pfs.create(p, true)
-      val writer =
-        new DataFileWriter[GenericRecord](
-          new GenericDatumWriter[GenericRecord](as))
-      if (compression != "none")
-        writer.setCodec(org.apache.avro.file.CodecFactory.fromString(compression))
-      writer.create(as, os)
-      try rows.foreach { r =>
-        writer.append(
-          toAvroRecord(r, as, sparkSchema))
-      } finally { writer.close() }
-    }
-    fs.create(new Path(outPath, "_SUCCESS"), true).close()
   }
 
   // ------------------------------------------------- spark -> avro types
@@ -351,46 +306,39 @@ object AvroIO {
 
   // ------------------------------------------------ spark -> avro values
 
-  private def toAvroRecord(r: Row, as: ASchema, st: StructType): GenericRecord = {
+  private def toAvroRecord(r: InternalRow, as: ASchema,
+      st: StructType): GenericRecord = {
     val rec = new GenericData.Record(as)
     st.fields.zipWithIndex.foreach { case (f, i) =>
-      val fieldSchema = as.getFields.get(i).schema
-      rec.put(i,
-        toAvroValue(if (r.isNullAt(i)) null else r.get(i),
-          fieldSchema, f.dataType))
+      rec.put(i, if (r.isNullAt(i)) null
+        else toAvroValue(r.get(i, f.dataType), as.getFields.get(i).schema,
+          f.dataType))
     }
     rec
   }
 
+  /** A Catalyst value as the avro datum of its [[toAvroSchema]]. */
   private def toAvroValue(v: Any, s: ASchema, dt: DataType): Any = {
-    if (v == null) return null
     val rs = if (s.getType == ASchema.Type.UNION) nonNullBranch(s) else s
+    def elems(a: ArrayData, es: ASchema, et: DataType): Seq[Any] =
+      (0 until a.numElements()).map(i =>
+        if (a.isNullAt(i)) null else toAvroValue(a.get(i, et), es, et))
     dt match {
-      case DateType =>
-        v.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay.toInt
-      case TimestampType =>
-        val ts = v.asInstanceOf[java.sql.Timestamp]
-        ts.getTime / 1000 * 1000000L + ts.getNanos / 1000
+      case StringType => new Utf8(v.asInstanceOf[UTF8String].getBytes)
       case d: DecimalType =>
-        val bd = v match {
-          case b: java.math.BigDecimal => BigDecimal(b)
-          case b: BigDecimal           => b
-        }
-        ByteBuffer.wrap(
-          bd.setScale(d.scale).underlying.unscaledValue.toByteArray)
+        ByteBuffer.wrap(v.asInstanceOf[Decimal].toJavaBigDecimal
+          .setScale(d.scale).unscaledValue.toByteArray)
       case BinaryType => ByteBuffer.wrap(v.asInstanceOf[Array[Byte]])
       case ArrayType(et, _) =>
-        // Row's external array is a mutable.ArraySeq — match on the
-        // collection.Seq supertype
-        v.asInstanceOf[scala.collection.Seq[Any]].toSeq
-          .map(toAvroValue(_, rs.getElementType, et)).asJava
+        elems(v.asInstanceOf[ArrayData], rs.getElementType, et).asJava
       case MapType(_, vt, _) =>
-        v.asInstanceOf[scala.collection.Map[String, Any]].map {
-          case (k, mv) => k -> toAvroValue(mv, rs.getValueType, vt)
-        }.toMap.asJava
+        val m = v.asInstanceOf[MapData]
+        m.keyArray().toArray[UTF8String](StringType).map(_.toString)
+          .zip(elems(m.valueArray(), rs.getValueType, vt)).toMap.asJava
       case inner: StructType =>
-        toAvroRecord(v.asInstanceOf[Row], rs, inner)
-      case _ => v
+        toAvroRecord(v.asInstanceOf[InternalRow], rs, inner)
+      case _ => v // boolean/ints/long/float/double; date days and
+      // timestamp micros are already the avro logical values
     }
   }
 }

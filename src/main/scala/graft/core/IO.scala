@@ -47,32 +47,19 @@ object IO {
       samplingRatio: Double = 1.0): DataFrame =
     spark.read.option("samplingRatio", samplingRatio.toString).json(paths: _*)
 
-  /** Native Avro scan (replaces the legacy newAPIHadoopFile converter
-    * path, spark_utils.py:434-478). Prefers the spark-avro connector
-    * (splittable, vectorized — clusters add it via `--packages` exactly
-    * as the reference's run_spark wrapper does); when the connector jar
-    * is absent, falls back to [[AvroIO.read]] on the avro core API that
-    * ships in every Spark distribution (per-file parallelism, streaming
-    * decode — see AvroIO's scale notes). */
+  /** Avro scan (replaces the legacy newAPIHadoopFile converter path,
+    * spark_utils.py:434-478) through [[AvroIO]], a Spark file format on
+    * the avro core API that ships in every Spark distribution: split at
+    * container sync markers, column-pruned, with file names and input
+    * metrics from Spark's own file scan. */
   def avro(spark: SparkSession, paths: Seq[String]): DataFrame =
-    try spark.read.format("avro").load(paths: _*)
-    catch {
-      case e: Exception if connectorMissing(e) => AvroIO.read(spark, paths)
-    }
+    spark.read.format(classOf[AvroIO].getName).load(paths: _*)
 
-  /** Avro write with the same connector-first / core-API-fallback
-    * policy as [[avro]]. */
+  /** Avro write through [[AvroIO]]: one snappy container file per task
+    * under Spark's commit protocol. */
   def writeAvro(df: DataFrame, out: String): Unit =
-    try df.write.mode(SaveMode.Overwrite).format("avro").save(out)
-    catch {
-      case e: Exception if connectorMissing(e) => AvroIO.write(df, out)
-    }
-
-  private def connectorMissing(e: Exception): Boolean = {
-    val m = Option(e.getMessage).getOrElse("")
-    m.contains("DATA_SOURCE_NOT_FOUND") ||
-      (m.contains("Failed to find") && m.contains("avro"))
-  }
+    df.write.mode(SaveMode.Overwrite).format(classOf[AvroIO].getName)
+      .save(out)
 
   def parquet(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.parquet(paths: _*)

@@ -649,7 +649,8 @@ object Streams {
     * is no window where the merge landed but the ledger didn't. Skip
     * if `batchId` is already ledgered; a crash between the two swap
     * renames leaves the complete previous store under `__prev`
-    * (the [[toScdStore]] recovery story). The [[upsertSketchStore]]
+    * (the [[toScdStore]] recovery story), which the next cycle moves
+    * back into place whether or not it merges. The [[upsertSketchStore]]
     * boundedness guard applies to the data side.
     *
     * The ledger is BOUNDED: Structured Streaming batch ids are
@@ -667,6 +668,11 @@ object Streams {
       maxRows: Long, oversizeHint: String)(
       merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     val fs = storeFs(spark, storeDir)
+    // a crash between the swap's two renames left the store under
+    // __prev: move it back first, since a replayed id skips the swap
+    val (cur, prev) = (new org.apache.hadoop.fs.Path(storeDir),
+      new org.apache.hadoop.fs.Path(s"${storeDir}__prev"))
+    if (!fs.exists(cur) && fs.exists(prev)) fs.rename(prev, cur)
     val existing = snapshotOf(fs, storeDir, dataName)
     // high-water mark of merged epochs (None for a fresh store); the
     // ledger read is a one-row (or legacy bounded) file, never data
@@ -959,7 +965,7 @@ object Streams {
     val gateOn = "the trained gate is part of the store's admission " +
       "contract"
     val meta = new StoreMeta(s, fs, storeDir, "curatedCommitIndexed",
-      "toCuratedCorpusStoreIndexed", Seq(
+      "curated", Seq(
         Pin("max_df", "maxDf", maxDf, None,
           "the df cap is part of the store's admission contract"),
         SchemaOf("fps"), SchemaOf("postings"), SchemaOf("dfs"),
@@ -1146,10 +1152,10 @@ object Streams {
 
   /** One pinned parameter of a store's admission contract: its meta
     * `column`, the `param` name errors show, this commit's `value`, what
-    * a legacy store without the column reads as (None: the column marks
-    * the store family, so a store without it is refused as another kind
-    * of store), and `why` it is pinned. A `modality` pin (what the store
-    * holds) is checked before every threshold. */
+    * a legacy store without the column reads as (None: every store of
+    * the family stamped it, so it reads as null and refuses), and `why`
+    * it is pinned. A `modality` pin (what the store holds) is checked
+    * before every threshold. */
   private final case class Pin(column: String, param: String, value: Any,
       legacy: Option[Any], why: String, modality: Boolean = false)
       extends MetaCol
@@ -1161,11 +1167,11 @@ object Streams {
     def column: String = s"${table}_schema"
   }
 
-  /** The one-row meta table of an admission store of `family`:
-    * `contract` lists its columns in order. The row is read once, here;
-    * a stored row whose pins disagree with this commit's values refuses
-    * the commit, before any work. [[stamp]] writes the row on the first
-    * commit. */
+  /** The one-row meta table of an admission store of `family` (a
+    * [[familyOf]] value): `contract` lists its columns in order. The row
+    * is read once, here; a stored row of another family, or whose pins
+    * disagree with this commit's values, refuses the commit, before any
+    * work. [[stamp]] writes the row on the first commit. */
   private final class StoreMeta(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, storeDir: String,
       caller: String, family: String, contract: Seq[MetaCol]) {
@@ -1176,16 +1182,14 @@ object Streams {
         Some(spark.read.parquet(dir).first())
       else None
     row.foreach { m =>
+      require(familyOf(m) == family, s"$caller: $storeDir is a " +
+        s"${familyOf(m)} store, not a $family store — committing " +
+        "another kind of batch into the store would silently corrupt " +
+        "its admission index")
       val has = m.schema.fieldNames.toSet
-      val pins = contract.collect { case p: Pin => p }
-      for (p <- pins if p.legacy.isEmpty)
-        require(has(p.column), s"$caller: $storeDir is not a " +
-          s"$family store (meta pins no ${p.column} — committing " +
-          "another kind of batch into the store would silently corrupt " +
-          "its admission index)")
-      pins.sortBy(!_.modality).foreach { p =>
+      contract.collect { case p: Pin => p }.sortBy(!_.modality).foreach { p =>
         val stored =
-          if (has(p.column)) m.getAs[Any](p.column) else p.legacy.get
+          if (has(p.column)) m.getAs[Any](p.column) else p.legacy.orNull
         require(stored == p.value,
           s"$caller: store $storeDir was created with " +
             s"${p.param}=$stored but this commit uses " +
@@ -1207,6 +1211,18 @@ object Streams {
       }
   }
 
+  /** Which admission kernel family commits into the store whose meta
+    * row is `m`: `curated`, `paired`, `video` or `media` (image and
+    * audio), told apart by the column each family's contract alone
+    * pins. */
+  private def familyOf(m: org.apache.spark.sql.Row): String = {
+    val has = m.schema.fieldNames.toSet
+    if (has("max_df")) "curated"
+    else if (has("min_jac")) "paired"
+    else if (has("min_containment")) "video"
+    else "media"
+  }
+
   /** What kind of admission store `storeDir` is, from its meta row:
     * `curated` (`+url`, `+clf`), `media:image|audio|video` (`media` for
     * an image or audio store that predates `media_kind`) or
@@ -1215,15 +1231,15 @@ object Streams {
     val m = spark.read.parquet(s"$storeDir/meta").first()
     def has(c: String) = m.schema.fieldNames.contains(c)
     def on(c: String) = has(c) && m.getAs[Boolean](c)
-    if (has("max_df"))
-      "curated" + (if (on("url_rail")) "+url" else "") +
+    familyOf(m) match {
+      case "curated" => "curated" + (if (on("url_rail")) "+url" else "") +
         (if (on("clf_gate")) "+clf" else "")
-    else if (has("min_jac"))
-      "paired:" + (if (has("pair_kind")) m.getAs[String]("pair_kind")
-        else "captioned-image")
-    else if (has("min_containment")) "media:video"
-    else if (has("media_kind")) s"media:${m.getAs[String]("media_kind")}"
-    else "media"
+      case "paired" => "paired:" + (if (has("pair_kind"))
+        m.getAs[String]("pair_kind") else "captioned-image")
+      case "video" => "media:video"
+      case _ => if (has("media_kind"))
+        s"media:${m.getAs[String]("media_kind")}" else "media"
+    }
   }
 
   /** An index schema pinned in a store's meta row (`field` holds its
@@ -1536,7 +1552,7 @@ object Streams {
     val fs = storeFs(s, storeDir)
     requireNoPendingCompaction(fs, caller, Seq(fpsDir, bandsDir))
     // a store without media_kind predates the pin: accepted as any kind
-    val meta = new StoreMeta(s, fs, storeDir, caller, "media corpus", Seq(
+    val meta = new StoreMeta(s, fs, storeDir, caller, "media", Seq(
       Pin("max_hamming", "maxHamming", maxHamming, None,
         "the threshold is part of the store's admission contract"),
       SchemaOf("fps"), SchemaOf("bands"),
@@ -1697,7 +1713,7 @@ object Streams {
       Seq(fpsDir, bandsDir, framesDir))
     val contract = "part of the store's admission contract"
     val meta = new StoreMeta(s, fs, storeDir, "videoCommit",
-      "video corpus", Seq(
+      "video", Seq(
         Pin("min_containment", "minContainment", minContainment, None,
           s"the containment threshold is $contract"),
         Pin("frame_bytes", "frameBytes", frameBytes, None,
@@ -1944,7 +1960,7 @@ object Streams {
     requireNoPendingCompaction(fs, caller,
       Seq(fpsDir, bandsDir, postingsDir))
     // pre-r13 captioned stores have no pair_kind column (image)
-    val meta = new StoreMeta(s, fs, storeDir, caller, "paired admission",
+    val meta = new StoreMeta(s, fs, storeDir, caller, "paired",
       Seq(
         Pin("max_hamming", "maxHamming", maxHamming, None,
           "the Hamming threshold is part of the store's admission " +

@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.AvroIO
+import graft.core.{AvroIO, IO}
 
-/** Connector-free avro source/sink (core/AvroIO.scala): full type
-  * surface round-trip, logical types, nested structures, union
-  * handling, and the multi-branch-union rejection contract. */
+/** The avro file format (core/AvroIO.scala) through `IO.avro` and
+  * `IO.writeAvro`: full type surface round-trip, logical types, nested
+  * structures, union handling, the multi-branch-union rejection
+  * contract, sync-marker splits and column pruning. */
 class AvroIoSpec extends AnyFunSuite {
 
   lazy val spark = graft.core.Sessions.local(4, "graft-avro-test")
@@ -36,8 +37,8 @@ class AvroIoSpec extends AnyFunSuite {
              CAST(id AS decimal(12,3)) / 7          AS dec
       FROM range(100)""")
     val dir = s"${tmpDir()}/t"
-    AvroIO.write(df, dir)
-    val back = AvroIO.read(spark, Seq(dir))
+    IO.writeAvro(df, dir)
+    val back = IO.avro(spark, Seq(dir))
     assert(back.schema("dt").dataType == DateType)
     assert(back.schema("ts").dataType == TimestampType)
     assert(back.schema("dec").dataType.isInstanceOf[DecimalType])
@@ -64,8 +65,8 @@ class AvroIoSpec extends AnyFunSuite {
                     ELSE concat('y', id) END)       AS st
       FROM range(30)""")
     val dir = s"${tmpDir()}/nested"
-    AvroIO.write(df, dir)
-    val back = AvroIO.read(spark, Seq(dir)).orderBy("id")
+    IO.writeAvro(df, dir)
+    val back = IO.avro(spark, Seq(dir)).orderBy("id")
     assert(back.count() == 30)
     val r0 = back.where(col("id") === 0).head
     assert(r0.isNullAt(1)) // arr NULL at id%3=0
@@ -99,11 +100,11 @@ class AvroIoSpec extends AnyFunSuite {
   test("write is distributed: one container file per partition + _SUCCESS") {
     val df = spark.range(1000).repartition(7).toDF("id")
     val dir = s"${tmpDir()}/parts"
-    AvroIO.write(df, dir)
+    IO.writeAvro(df, dir)
     val files = new java.io.File(dir).listFiles.map(_.getName).sorted
     assert(files.count(_.endsWith(".avro")) == 7)
     assert(files.contains("_SUCCESS"))
-    assert(AvroIO.read(spark, Seq(dir)).agg(sum("id")).head.getLong(0)
+    assert(IO.avro(spark, Seq(dir)).agg(sum("id")).head.getLong(0)
       == 499500L)
   }
 
@@ -113,10 +114,10 @@ class AvroIoSpec extends AnyFunSuite {
     // non-empty file rather than trusting files.head
     val df = spark.range(50).toDF("id")
     val dir = s"${tmpDir()}/withEmpty"
-    AvroIO.write(df, dir)
+    IO.writeAvro(df, dir)
     // a name that sorts FIRST, to force the old files.head failure
     new java.io.File(dir, "aaa-placeholder.avro").createNewFile()
-    val back = AvroIO.read(spark, Seq(dir))
+    val back = IO.avro(spark, Seq(dir))
     assert(back.count() == 50)
     assert(back.agg(sum("id")).head.getLong(0) == 1225L)
   }
@@ -125,37 +126,57 @@ class AvroIoSpec extends AnyFunSuite {
     // ONE container file, many blocks (avro flushes a block every
     // ~64 KiB): the splittable read must parallelize WITHIN the file
     // and still deliver every record exactly once across the
-    // contiguous byte-range splits.
+    // contiguous byte-range splits Spark carves
     val n = 200000L
     val df = spark.range(n).coalesce(1)
       .selectExpr("id", "repeat('x', 32) AS pad")
     val dir = s"${tmpDir()}/one"
-    AvroIO.write(df, dir, compression = "none")
+    IO.writeAvro(df, dir)
     val avroFiles = new java.io.File(dir).listFiles
       .filter(_.getName.endsWith(".avro"))
     assert(avroFiles.length == 1)
-    val back = AvroIO.read(spark, Seq(dir), minPartitions = 8)
-    assert(back.rdd.getNumPartitions >= 8)
-    // more than one split actually carries records (sync() landed
-    // mid-file, not everything collapsing into split 0)
-    val perPart = back.rdd
-      .mapPartitions(it => Iterator.single(it.size))
-      .collect()
-    assert(perPart.count(_ > 0) > 1,
-      s"expected >1 non-empty split, got ${perPart.mkString(",")}")
-    // exactly-once across splits: count, distinct and checksum all match
-    assert(back.count() == n)
-    assert(back.agg(countDistinct("id")).head.getLong(0) == n)
-    assert(back.agg(sum("id")).head.getLong(0) == n * (n - 1) / 2)
+    // splits of at most an eighth of the file
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, (avroFiles.head.length / 8 + 1).toString)
+    try {
+      val back = IO.avro(spark, Seq(dir))
+      assert(back.rdd.getNumPartitions >= 8)
+      // more than one split actually carries records (sync() landed
+      // mid-file, not everything collapsing into split 0)
+      val perPart = back.rdd
+        .mapPartitions(it => Iterator.single(it.size))
+        .collect()
+      assert(perPart.count(_ > 0) > 1,
+        s"expected >1 non-empty split, got ${perPart.mkString(",")}")
+      // exactly-once across splits: count, distinct and checksum match
+      assert(back.count() == n)
+      assert(back.agg(countDistinct("id")).head.getLong(0) == n)
+      assert(back.agg(sum("id")).head.getLong(0) == n * (n - 1) / 2)
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("read of a directory written by the fallback preserves row count per file") {
-    // multiple paths + glob-style directory expansion in headerSchema
+    // multiple paths, each a directory Spark lists
     val df = spark.range(10).toDF("id")
     val d1 = s"${tmpDir()}/a"; val d2 = s"${tmpDir()}/b"
-    AvroIO.write(df, d1); AvroIO.write(df.withColumn("id", col("id") + 10), d2)
-    val back = AvroIO.read(spark, Seq(d1, d2))
+    IO.writeAvro(df, d1); IO.writeAvro(df.withColumn("id", col("id") + 10), d2)
+    val back = IO.avro(spark, Seq(d1, d2))
     assert(back.count() == 20)
     assert(back.agg(countDistinct("id")).head.getLong(0) == 20)
+  }
+
+  test("a one-column select of a wide file scans only that column") {
+    val df = spark.range(100).selectExpr(
+      (0 until 12).map(i => s"id * $i AS c$i"): _*)
+    val dir = s"${tmpDir()}/wide"
+    IO.writeAvro(df, dir)
+    val one = IO.avro(spark, Seq(dir)).select("c3")
+    val scans = one.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size == 1)
+    assert(scans.head.metadata("ReadSchema") == "struct<c3:bigint>")
+    assert(one.agg(sum("c3")).head.getLong(0) == 3L * 4950L)
   }
 }

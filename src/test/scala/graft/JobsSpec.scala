@@ -216,24 +216,33 @@ class JobsSpec extends AnyFunSuite {
 
   test("rucio dailyTally: tally day from input_file_name, create day " +
     "from epoch, LFN join, per-key byte sums") {
-    // real dated dump dirs so input_file_name has a path to parse
+    // real dated dump dirs so input_file_name has a path to parse; each
+    // day's dump is written both as parquet and as Avro
     val base = java.nio.file.Files
       .createTempDirectory("graft-rucio").toString + "/rucio"
-    Seq(
-      ("/store/f1", "cms", "rse-a", 100L, 1704067200000L),
-      ("/store/f1", "cms", "rse-a", 50L, 1704067200000L),
-      ("/store/ghost", "cms", "rse-a", 9L, 1704067200000L))
-      .toDF("NAME", "SCOPE", "RSE_ID", "BYTES", "CREATED_AT")
-      .write.parquet(s"$base/2024-01-05/part.parquet")
-    Seq(("/store/f2", "cms", "rse-b", 70L, 1706745600000L))
-      .toDF("NAME", "SCOPE", "RSE_ID", "BYTES", "CREATED_AT")
-      .write.parquet(s"$base/2024-01-06/part.parquet")
+    val days = Seq(
+      "2024-01-05" -> Seq(
+        ("/store/f1", "cms", "rse-a", 100L, 1704067200000L),
+        ("/store/f1", "cms", "rse-a", 50L, 1704067200000L),
+        ("/store/ghost", "cms", "rse-a", 9L, 1704067200000L)),
+      "2024-01-06" -> Seq(("/store/f2", "cms", "rse-b", 70L, 1706745600000L)))
+    for ((day, rows) <- days) {
+      val dump = rows.toDF("NAME", "SCOPE", "RSE_ID", "BYTES", "CREATED_AT")
+      dump.write.parquet(s"$base/$day/part.parquet")
+      graft.core.IO.writeAvro(dump, s"$base/$day/part.avro")
+    }
     val replicas = spark.read.parquet(
-      s"$base/2024-01-05/part.parquet", s"$base/2024-01-06/part.parquet")
+      days.map { case (day, _) => s"$base/$day/part.parquet" }: _*)
     val dbsFiles = Seq((10L, "/store/f1", 1L), (11L, "/store/f2", 2L))
       .toDF("f_file_id", "f_logical_file_name", "f_dataset_id")
     val got = RucioJobs.dailyTally(replicas, dbsFiles)
       .orderBy("tally_day").collect()
+    // the Avro dumps give the same rows: the Avro scan names each row's
+    // source file too
+    val avroReplicas = graft.core.IO.avro(spark,
+      days.map { case (day, _) => s"$base/$day/part.avro" })
+    assert(RucioJobs.dailyTally(avroReplicas, dbsFiles)
+      .orderBy("tally_day").collect().toSeq == got.toSeq)
     assert(got.length == 2) // ghost LFN dropped by the DBS join
     val d5 = got(0)
     assert(d5.getAs[String]("tally_day") == "20240105")

@@ -43,9 +43,9 @@ class RunnerSpec extends AnyFunSuite {
     val spark = graft.core.Sessions.local(4, "graft-runner-avro")
     val dir = Files.createTempDirectory("graft-runner-avro").toString
     // same dump content as the CSV test, shipped as avro container
-    // files through IO.writeAvro (in this sandbox: the AvroIO
-    // fallback) — proves the reference's avro ingest path end-to-end
-    // without the spark-avro connector
+    // files through IO.writeAvro (the AvroIO file format) — proves the
+    // reference's avro ingest path end-to-end without the spark-avro
+    // connector
     Files.writeString(JPaths.get(s"$dir/datasets.csv"),
       "1,/PrimA/Proc-v1/RAW,1,1,1,1,1,1,1,1,0.0,null,0.0,x,0.0,x\n" +
         "2,/PrimB/Proc-v2/AOD,1,1,1,1,1,1,1,1,0.0,null,0.0,x,0.0,x\n")

@@ -1873,6 +1873,17 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(intoAudio.getMessage.contains("one modality per store"))
     assert(ids(imgStore) == Seq(1L) && ids(audStore) == Seq(1L))
+    // a paired (captioned-image) store is another family: an image
+    // commit into it refuses before it writes an fps partition
+    val capStore = s"$dir/cap"
+    Streams.captionedCommit(Seq((1L, img(1L, 5L)._2, "a red square", "s"))
+      .toDF("id", "payload", "caption", "src"), 0L, "id", "payload",
+      "caption", "src", capStore, 4, 0.2)
+    val intoPaired = intercept[IllegalArgumentException] {
+      image(capStore, 1L, img(2L, 6L))
+    }
+    assert(intoPaired.getMessage.contains("not a media store"))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$capStore/fps/batch=1")))
     assert(Streams.storeKind(spark, imgStore) == "media:image")
     assert(Streams.storeKind(spark, audStore) == "media:audio")
     // a store stamped before media_kind existed: no column, kind
@@ -1936,6 +1947,8 @@ class StreamingSpec extends AnyFunSuite {
       Seq(99L).toDF("batch_id").write.parquet(s"$tmp/batches")
     }
     Streams.mergeCmsBatch(spark, cms, sketchOf(t1), 1L) // replay: no-op
+    // ... that still moves __prev back into place
+    assert(Files.exists(path(cms)) && !Files.exists(path(s"${cms}__prev")))
     Streams.mergeCmsBatch(spark, cms, sketchOf(t2), 2L)
     assert(counts(spark.read.parquet(s"$cms/sketch")) ==
       counts(sketchOf(t0 ++ t1 ++ t2)))
