@@ -51,20 +51,30 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 class AvroIO extends FileFormat with Serializable {
 
+  /** The header [[inferSchema]] peeked, as JSON: the one reader schema
+    * of every file of this relation, so avro's own schema resolution
+    * promotes a later file's narrower types (int to long, float to
+    * double) and fills its missing nullable fields. Spark infers a
+    * relation's schema and builds its scans on one format instance. */
+  @transient private var headerJson: String = _
+
   /** The writer schema of the first non-empty file (a header peek);
     * zero-length placeholders left by interrupted writers carry no
     * header. */
   override def inferSchema(spark: SparkSession,
       options: Map[String, String],
       files: Seq[FileStatus]): Option[StructType] =
-    files.find(_.getLen > 0).map(f => AvroIO.toSparkType(
-      AvroIO.headerSchema(spark, f.getPath)).asInstanceOf[StructType])
+    files.find(_.getLen > 0).map { f =>
+      val header = AvroIO.headerSchema(spark, f.getPath)
+      headerJson = header.toString
+      AvroIO.toSparkType(header).asInstanceOf[StructType]
+    }
 
   override def isSplitable(spark: SparkSession,
       options: Map[String, String], path: Path): Boolean = true
 
-  /** Each file's own writer schema, projected to `requiredSchema`, is
-    * the reader schema of its splits: avro skips the pruned fields. */
+  /** The peeked header, projected to `requiredSchema`, is the reader
+    * schema of every split: avro skips the pruned fields. */
   override def buildReader(spark: SparkSession, dataSchema: StructType,
       partitionSchema: StructType, requiredSchema: StructType,
       filters: Seq[Filter], options: Map[String, String],
@@ -73,18 +83,22 @@ class AvroIO extends FileFormat with Serializable {
     // entry list and rebuild it per file
     val confEntries = hadoopConf.asScala.map(e => e.getKey -> e.getValue)
       .toArray
+    require(headerJson != null,
+      "AvroIO reads the schema of its files' header; a given schema is " +
+        "not supported")
+    val readerJson = AvroIO.project(
+      new ASchema.Parser().parse(headerJson), requiredSchema).toString
     (file: PartitionedFile) =>
       if (file.fileSize == 0L) Iterator.empty
       else {
         val conf = new Configuration(false)
         confEntries.foreach { case (k, v) => conf.set(k, v) }
-        val datum = new GenericDatumReader[GenericRecord]()
+        val projected = new ASchema.Parser().parse(readerJson)
         val reader = new DataFileReader[GenericRecord](
-          new FsInput(file.toPath, conf), datum)
+          new FsInput(file.toPath, conf),
+          new GenericDatumReader[GenericRecord](null, projected))
         Option(TaskContext.get())
           .foreach(_.addTaskCompletionListener[Unit](_ => reader.close()))
-        val projected = AvroIO.project(reader.getSchema, requiredSchema)
-        datum.setExpected(projected)
         val end = file.start + file.length
         reader.sync(file.start)
         // closed on exhaust too: a task may read many packed files
@@ -100,14 +114,12 @@ class AvroIO extends FileFormat with Serializable {
       }
   }
 
-  /** One container file per task; `compression` (default snappy, or
-    * `none`) is the block codec. */
+  /** One snappy container file per task. */
   override def prepareWrite(spark: SparkSession, job: Job,
       options: Map[String, String],
       dataSchema: StructType): OutputWriterFactory = {
     val schemaJson =
       AvroIO.toAvroSchema(dataSchema, "topLevelRecord").toString
-    val compression = options.getOrElse("compression", "snappy")
     new OutputWriterFactory {
       def getFileExtension(context: TaskAttemptContext): String = ".avro"
       def newInstance(file: String, dataSchema: StructType,
@@ -116,8 +128,7 @@ class AvroIO extends FileFormat with Serializable {
         private val writer = {
           val w = new DataFileWriter[GenericRecord](
             new GenericDatumWriter[GenericRecord](as))
-          if (compression != "none")
-            w.setCodec(CodecFactory.fromString(compression))
+          w.setCodec(CodecFactory.snappyCodec())
           val p = new Path(file)
           w.create(as, p.getFileSystem(context.getConfiguration).create(p))
         }
@@ -150,18 +161,18 @@ object AvroIO {
     } finally in.close()
   }
 
-  /** The writer record schema cut down to `required`'s fields, in its
-    * order; a field this file lacks reads as null. */
-  private def project(writer: ASchema, required: StructType): ASchema = {
+  /** The header's record (a top-level `[null, record]` unwrapped) cut
+    * down to `required`'s fields, in its order, defaults kept. */
+  private def project(header: ASchema, required: StructType): ASchema = {
+    val record =
+      if (header.getType == ASchema.Type.UNION) nonNullBranch(header)
+      else header
     val fields = required.fields.toSeq.map { f =>
-      Option(writer.getField(f.name))
-        .map(w => new ASchema.Field(w, w.schema))
-        .getOrElse(new ASchema.Field(f.name, nullableWrap(
-          toAvroSchema(f.dataType, writer.getName + "_" + f.name), true),
-          null, ASchema.Field.NULL_DEFAULT_VALUE))
+      val w = record.getField(f.name)
+      new ASchema.Field(w, w.schema)
     }
-    ASchema.createRecord(writer.getName, writer.getDoc,
-      writer.getNamespace, writer.isError, fields.asJava)
+    ASchema.createRecord(record.getName, record.getDoc,
+      record.getNamespace, record.isError, fields.asJava)
   }
 
   // ------------------------------------------------- avro -> spark types

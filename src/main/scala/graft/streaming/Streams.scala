@@ -431,24 +431,30 @@ object Streams {
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Where a rename-aside store ([[swapAside]]) keeps its last
-    * complete state: `dir` itself, or `dir__prev` after a crash
-    * between the swap's two renames; None for a fresh store. `probe`
-    * names the child that must exist (a ledgered store's data table).
-    * Bootstrap tolerates ONLY a missing store: a read failure on an
-    * existing one (corrupt footer, permissions, transient FS error)
-    * propagates to the caller's read. */
+  /** The last complete state of a rename-aside store ([[swapAside]]):
+    * `dir`, after moving `dir__prev` back into place when a crash
+    * between the swap's two renames left the store there; None for a
+    * fresh store. Every snapshot store reads through here first, so
+    * the recovery happens whether or not the batch then merges.
+    * `probe` names the child that must exist (a ledgered store's data
+    * table). Bootstrap tolerates ONLY a missing store: a read failure
+    * on an existing one (corrupt footer, permissions, transient FS
+    * error) propagates to the caller's read. */
   private def snapshotOf(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      probe: String = ""): Option[String] =
-    Seq(dir, s"${dir}__prev").find(d => fs.exists(
+      probe: String = ""): Option[String] = {
+    val (cur, prev) = (new org.apache.hadoop.fs.Path(dir),
+      new org.apache.hadoop.fs.Path(s"${dir}__prev"))
+    if (!fs.exists(cur) && fs.exists(prev)) fs.rename(prev, cur)
+    Some(dir).filter(d => fs.exists(
       new org.apache.hadoop.fs.Path(if (probe.isEmpty) d else s"$d/$probe")))
+  }
 
   /** The rename-aside swap of every snapshot store: `write` fills
     * `dir__tmp` (it may delete it and throw to abort, leaving the store
     * untouched), then the current state moves to `dir__prev` before
     * tmp moves in, so at every instant a complete store exists on disk
     * (current, or `__prev` during the two-rename window, which
-    * [[snapshotOf]] reads) — unlike delete-then-rename, where a crash
+    * [[snapshotOf]] moves back) — unlike delete-then-rename, where a crash
     * after the delete left nothing. `__prev` is dropped only after the
     * new state lands. */
   private def swapAside(fs: org.apache.hadoop.fs.FileSystem, dir: String)(
@@ -648,9 +654,9 @@ object Streams {
     * so ONE directory rename commits data and ledger together: there
     * is no window where the merge landed but the ledger didn't. Skip
     * if `batchId` is already ledgered; a crash between the two swap
-    * renames leaves the complete previous store under `__prev`
-    * (the [[toScdStore]] recovery story), which the next cycle moves
-    * back into place whether or not it merges. The [[upsertSketchStore]]
+    * renames leaves the complete previous store under `__prev`,
+    * which [[snapshotOf]] moves back into place before the ledger
+    * check, so also on a replayed id. The [[upsertSketchStore]]
     * boundedness guard applies to the data side.
     *
     * The ledger is BOUNDED: Structured Streaming batch ids are
@@ -668,11 +674,6 @@ object Streams {
       maxRows: Long, oversizeHint: String)(
       merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     val fs = storeFs(spark, storeDir)
-    // a crash between the swap's two renames left the store under
-    // __prev: move it back first, since a replayed id skips the swap
-    val (cur, prev) = (new org.apache.hadoop.fs.Path(storeDir),
-      new org.apache.hadoop.fs.Path(s"${storeDir}__prev"))
-    if (!fs.exists(cur) && fs.exists(prev)) fs.rename(prev, cur)
     val existing = snapshotOf(fs, storeDir, dataName)
     // high-water mark of merged epochs (None for a fresh store); the
     // ledger read is a one-row (or legacy bounded) file, never data

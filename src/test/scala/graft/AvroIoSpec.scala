@@ -166,6 +166,40 @@ class AvroIoSpec extends AnyFunSuite {
     assert(back.agg(countDistinct("id")).head.getLong(0) == 20)
   }
 
+  test("one reader schema: a later file's int and float promote to the " +
+    "first file's long and double, a missing nullable column reads null") {
+    val a = s"${tmpDir()}/wide"; val b = s"${tmpDir()}/narrow"
+    IO.writeAvro(spark.range(10).selectExpr("id", "id * 0.5D AS x",
+      "CASE WHEN id >= 0 THEN 'a' END AS tag"), a)
+    IO.writeAvro(spark.range(10, 20).selectExpr("CAST(id AS int) AS id",
+      "CAST(id * 0.5D AS float) AS x"), b)
+    val back = IO.avro(spark, Seq(a, b))
+    assert(back.schema("id").dataType == LongType)
+    assert(back.schema("x").dataType == DoubleType)
+    val r = back.agg(sum("id"), sum("x"), count("tag")).head
+    assert(r.getLong(0) == 190L && r.getDouble(1) == 95.0 &&
+      r.getLong(2) == 10L)
+  }
+
+  test("a top-level [null, record] writer schema reads as its record") {
+    val s = new ASchema.Parser().parse("""
+      ["null", {"type":"record","name":"r","fields":[
+        {"name":"id","type":"long"},{"name":"s","type":"string"}]}]""")
+    val dir = new java.io.File(tmpDir(), "union")
+    dir.mkdirs()
+    val w = new org.apache.avro.file.DataFileWriter[Object](
+      new org.apache.avro.generic.GenericDatumWriter[Object](s))
+    w.create(s, new java.io.File(dir, "part-0.avro"))
+    val rec = s.getTypes.get(1)
+    (0 until 5).foreach { i =>
+      val g = new org.apache.avro.generic.GenericData.Record(rec)
+      g.put("id", i.toLong); g.put("s", s"v$i"); w.append(g)
+    }
+    w.close()
+    val back = IO.avro(spark, Seq(dir.toString)).orderBy("id")
+    assert(back.collect().toSeq == (0 until 5).map(i => Row(i.toLong, s"v$i")))
+  }
+
   test("a one-column select of a wide file scans only that column") {
     val df = spark.range(100).selectExpr(
       (0 until 12).map(i => s"id * $i AS c$i"): _*)
